@@ -364,3 +364,23 @@ def test_light_frozen_module_is_actually_frozen():
         "q1_pricing_summary", "q5_revenue_by_nation",
         "knn_cosine_bruteforce", "dedup_minhash_pairs",
     }
+
+
+def test_bench_sf1_usage_errors(capsys):
+    """tools/bench_sf1.py reports a pass count below 1 and an unknown
+    --queries name as usage errors (exit 2, named in the message) before
+    any Spark work, instead of a TypeError or KeyError mid-run."""
+    import pytest
+
+    from tools.bench_sf1 import DEFAULT_QUERIES, parse_args
+
+    for argv, needle in (
+        (["--passes", "0"], "--passes"),
+        (["--queries", "q1_pricing_summary,no_such_entry"], "no_such_entry"),
+    ):
+        with pytest.raises(SystemExit) as exc:
+            parse_args(argv)
+        assert exc.value.code == 2
+        assert needle in capsys.readouterr().err
+    args, names = parse_args(["--passes", "1"])
+    assert args.passes == 1 and names == DEFAULT_QUERIES

@@ -81,6 +81,18 @@ def test_scale_smoke_harness_single_entry(spark):
     check_plan_parity(spark, "q1_pricing_summary", small, big)
 
 
+def test_slow_tier_names_are_registry_entries():
+    """Renaming a registry entry must not orphan its slow-tier gate: every
+    SLOW_TIER name, the always-on SLOW_SMOKE among them, is an entry of
+    the registry the oracle replica parametrizes over."""
+    import __spark_entry__ as entry
+
+    from tests.test_correctness import SLOW_SMOKE, SLOW_TIER
+
+    assert sorted(set(SLOW_TIER) - set(entry.queries())) == []
+    assert SLOW_SMOKE in SLOW_TIER
+
+
 def test_oracle_invariance_single_entry():
     """Execute the oracle-side thread-invariance tier's real path on one
     entry at sf0.01 (fast), plus prove its detector can fail: two

@@ -194,6 +194,101 @@ def test_inference_capture_path(spark, warehouse):
     assert reg.read_meta(ep.name)["last_inference_metrics"]["support"] is not None
 
 
+def _toy_frame(spark, slope=2.0):
+    """400 rows: y = slope·x + z/10 exactly, band = y's high/low class,
+    every fourth row held out for validation."""
+    y = F.lit(slope) * F.col("x") + F.col("z") / 10
+    return (
+        spark.range(400)
+        .select(
+            "id",
+            (F.col("id") % 100).cast("double").alias("x"),
+            ((F.col("id") * 7) % 13).cast("double").alias("z"),
+            (F.col("id") % 4 == 0).alias("validation"),
+        )
+        .withColumn("y", y)
+        .withColumn("band", F.when(y > 100, "high").otherwise("low"))
+    )
+
+
+@pytest.fixture
+def pipeline_loads(monkeypatch):
+    """Paths passed to PipelineModel.load while the test runs."""
+    from pyspark.ml import PipelineModel
+
+    real, paths = PipelineModel.load, []
+
+    def counting(path):
+        paths.append(path)
+        return real(path)
+
+    monkeypatch.setattr(PipelineModel, "load", staticmethod(counting))
+    return paths
+
+
+def test_endpoint_loads_pipeline_once(spark, warehouse, pipeline_loads):
+    from workbench_spark.api.model import Endpoint, Model
+
+    df = _toy_frame(spark)
+    m = Model.train(
+        df, "load_once_model", target="y", features=["x", "z"], algo="linear",
+        spark=spark, warehouse=warehouse,
+    )
+    ep = m.to_endpoint()
+    for _ in range(2):
+        ep.inference(df.limit(20), capture=True)
+    # train's in-memory pipeline serves its validation and the endpoint
+    assert pipeline_loads == []
+
+    # an endpoint built from the name alone reads the artifact once
+    fresh = Endpoint("load_once_model", spark=spark, warehouse=warehouse)
+    fresh.inference(df.limit(20), capture=False)
+    assert len(pipeline_loads) == 1
+    fresh.inference(df.limit(20), capture=False)
+    fresh.transform(df.limit(20)).count()
+    assert len(pipeline_loads) == 1
+
+
+def test_endpoint_serves_retrained_model(spark, warehouse):
+    from workbench_spark.api.model import Model
+
+    def served(ep, slope):
+        rows = ep.transform(_toy_frame(spark, slope)).select("x", "z", "prediction").collect()
+        return max(abs(r["prediction"] - (slope * r["x"] + r["z"] / 10)) for r in rows)
+
+    kw = dict(target="y", features=["x", "z"], algo="linear", spark=spark, warehouse=warehouse)
+    ep = Model.train(_toy_frame(spark, 2.0), "retrained_model", **kw).to_endpoint()
+    assert served(ep, 2.0) < 1e-6
+    Model.train(_toy_frame(spark, -3.0), "retrained_model", **kw)
+    assert served(ep, -3.0) < 1e-6
+
+
+@pytest.mark.parametrize(
+    "model_type,target", [("regressor", "y"), ("classifier", "band")]
+)
+def test_seeded_pipeline_metrics_equal_reloaded(
+    spark, warehouse, pipeline_loads, model_type, target
+):
+    """Validation metrics from train's in-memory pipeline equal, exactly,
+    the metrics of the same pipeline read back from disk."""
+    import json
+
+    from workbench_spark.api.model import Endpoint, Model
+
+    df = _toy_frame(spark)
+    name = f"seeded_{model_type}"
+    m = Model.train(
+        df, name, target=target, features=["x", "z"], model_type=model_type,
+        algo="rf", spark=spark, warehouse=warehouse,
+    )
+    assert pipeline_loads == []
+    val = df.filter("validation")
+    reloaded = Endpoint(name, spark=spark, warehouse=warehouse).inference(val, capture=False)
+    assert len(pipeline_loads) == 1
+    assert json.loads(json.dumps(reloaded.metrics, default=str)) == m.metrics()
+    assert Endpoint(m).inference(val, capture=False).metrics == reloaded.metrics
+
+
 def _uq_cal_frame(spark):
     """Deterministic regression calibration frame: target = acctbal,
     prediction = acctbal + seeded hash noise in [-10, 10]."""

@@ -236,12 +236,70 @@ def spark():
 CONSTANT_SIZE_TABLES = {"nation", "region"}
 
 
+def _bound_table(node, var_table: dict) -> str | None:
+    """The table an expression reads: unwrap Call/Attribute chains such as
+    ``p.filter(...).select(...)`` back to a ``_t(spark, sf_dir, "table")``
+    call or to a variable bound to one."""
+    import ast
+
+    while True:
+        if isinstance(node, ast.Call):
+            if isinstance(node.func, ast.Name) and node.func.id == "_t":
+                args = node.args
+                if len(args) >= 3 and isinstance(args[2], ast.Constant):
+                    return args[2].value
+                return None
+            node = node.func
+        elif isinstance(node, ast.Attribute):
+            node = node.value
+        elif isinstance(node, ast.Name):
+            return var_table.get(node.id)
+        else:
+            return None
+
+
+def forced_broadcast_violations(src: str, module: str) -> list[str]:
+    """Every broadcast(x) in ``src`` whose x reads an SF-scaling table."""
+    import ast
+
+    violations = []
+    for fndef in ast.walk(ast.parse(src)):
+        if not isinstance(fndef, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        # var -> table name for `var = _t(spark, sf_dir, "table")...`; a
+        # var derived from another var (e.g. a 1-row global .agg) is not
+        # bound
+        var_table = {}
+        for node in ast.walk(fndef):
+            if (
+                isinstance(node, ast.Assign)
+                and len(node.targets) == 1
+                and isinstance(node.targets[0], ast.Name)
+            ):
+                table = _bound_table(node.value, {})
+                if table is not None:
+                    var_table[node.targets[0].id] = table
+        for node in ast.walk(fndef):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "broadcast"
+                and node.args
+            ):
+                table = _bound_table(node.args[0], var_table)
+                if table is not None and table not in CONSTANT_SIZE_TABLES:
+                    violations.append(
+                        f"{module}.{fndef.name}: F.broadcast on "
+                        f"SF-scaling table '{table}'"
+                    )
+    return violations
+
+
 def test_no_forced_broadcast_on_sf_scaling_tables():
     """Source-level tripwire: every F.broadcast(x) in the query registry
     must wrap a variable loaded from a constant-size table. A forced hint
     on an SF-scaling table OOMs the driver at the 100 TB design point
     (round-3 verdict item #1: q3 customer, q14 part)."""
-    import ast
     import pathlib
 
     import workbench_spark.queries as qmod
@@ -250,45 +308,27 @@ def test_no_forced_broadcast_on_sf_scaling_tables():
     violations = []
     for mod in (qmod, qpmod):
         src = pathlib.Path(mod.__file__).read_text()
-        tree = ast.parse(src)
-        for fndef in ast.walk(tree):
-            if not isinstance(fndef, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                continue
-            # var -> table name for `var = _t(spark, sf_dir, "table")...`
-            var_table = {}
-            for node in ast.walk(fndef):
-                if isinstance(node, ast.Assign) and len(node.targets) == 1:
-                    tgt = node.targets[0]
-                    call = node.value
-                    # unwrap chained calls like _t(...).filter(...)
-                    while isinstance(call, ast.Call) and isinstance(
-                        call.func, ast.Attribute
-                    ):
-                        call = call.func.value
-                    if (
-                        isinstance(tgt, ast.Name)
-                        and isinstance(call, ast.Call)
-                        and isinstance(call.func, ast.Name)
-                        and call.func.id == "_t"
-                        and len(call.args) >= 3
-                        and isinstance(call.args[2], ast.Constant)
-                    ):
-                        var_table[tgt.id] = call.args[2].value
-            for node in ast.walk(fndef):
-                if (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "broadcast"
-                    and node.args
-                    and isinstance(node.args[0], ast.Name)
-                ):
-                    table = var_table.get(node.args[0].id)
-                    if table is not None and table not in CONSTANT_SIZE_TABLES:
-                        violations.append(
-                            f"{mod.__name__}.{fndef.name}: F.broadcast on "
-                            f"SF-scaling table '{table}'"
-                        )
+        violations += forced_broadcast_violations(src, mod.__name__)
     assert not violations, "\n".join(violations)
+
+
+def test_forced_broadcast_tripwire_catches_chained_hint():
+    """Seeded mutation: q9 with its old forced hint on the filtered part
+    table (``F.broadcast(p.select(...))``, a method chain rather than a
+    bare name) must trip the tripwire; q9's nation broadcast must not."""
+    import inspect
+    import textwrap
+
+    from workbench_spark.queries import q9_product_type_profit
+
+    src = textwrap.dedent(inspect.getsource(q9_product_type_profit))
+    assert forced_broadcast_violations(src, "q") == []
+    key_set = 'p.select(F.col("p_partkey").alias("__red_pk"))'
+    assert src.count(key_set) == 1
+    seeded = src.replace(key_set, f"F.broadcast({key_set})")
+    assert forced_broadcast_violations(seeded, "q") == [
+        "q.q9_product_type_profit: F.broadcast on SF-scaling table 'part'"
+    ]
 
 
 def _killer_params():

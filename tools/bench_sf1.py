@@ -68,13 +68,34 @@ def _timed(fn, spark, sf_dir) -> tuple[float, int]:
     return time.perf_counter() - t0, row["n"]
 
 
-def main() -> None:
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {n}")
+    return n
+
+
+def parse_args(argv: list[str] | None = None) -> tuple[argparse.Namespace, list[str]]:
+    """Parse the command line; returns the args and the query names to time.
+    A pass count below 1 or a name missing from the registry is a usage
+    error, reported before any Spark or corpus work starts."""
+    from workbench_spark.queries import queries
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default=None)
     ap.add_argument("--queries", default=None)
-    ap.add_argument("--passes", type=int, default=2)
+    ap.add_argument("--passes", type=_positive_int, default=2)
     ap.add_argument("--label", default=None, help="tag stored in the record")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
+    names = (args.queries or ",".join(DEFAULT_QUERIES)).split(",")
+    unknown = [n for n in names if n not in queries()]
+    if unknown:
+        ap.error(f"--queries: unknown registry name(s): {', '.join(unknown)}")
+    return args, names
+
+
+def main() -> None:
+    args, names = parse_args()
 
     from workbench_spark.queries import queries
     from workbench_spark.session import get_spark
@@ -85,7 +106,6 @@ def main() -> None:
     generate(spark, SF1_DIR, sf=1.0)  # no-op when already generated
     gen_s = round(time.perf_counter() - t0, 1)
 
-    names = (args.queries or ",".join(DEFAULT_QUERIES)).split(",")
     reg = queries()
     record: dict = {
         "sf": 1.0,

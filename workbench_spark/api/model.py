@@ -22,6 +22,7 @@ per BASELINE.json; its interface is stubbed in sagemaker_adapter.py.
 
 from __future__ import annotations
 
+import os
 from typing import Any
 
 from pyspark.ml import Pipeline, PipelineModel
@@ -66,6 +67,7 @@ class Model:
         self.spark = spark or get_spark()
         self.name = validate_name(name)
         self.registry = Registry(warehouse)
+        self._fitted: tuple[tuple[int, int], PipelineModel] | None = None
 
     # ------------------------------------------------------------ training
     @classmethod
@@ -115,6 +117,7 @@ class Model:
         fitted: PipelineModel = Pipeline(stages=stages).fit(train_df)
         model_path = self.registry.data_path(self.name)
         fitted.write().overwrite().save(model_path)
+        self._fitted = (_artifact_version(model_path), fitted)
 
         meta = {
             "artifact_type": "model",
@@ -132,14 +135,20 @@ class Model:
         self.registry.write_meta(self.name, meta)
 
         if val_df is not None and val_df.count() > 0:
-            ep = Endpoint(self.name, spark=self.spark, warehouse=self.registry.warehouse)
-            result = ep.inference(val_df, capture=False)
+            result = Endpoint(self).inference(val_df, capture=False)
             self.registry.upsert_meta(self.name, {"metrics": result.metrics})
         return self
 
     # ------------------------------------------------------------ access
     def pipeline(self) -> PipelineModel:
-        return PipelineModel.load(self.registry.data_path(self.name))
+        """The fitted pipeline, read from disk once per artifact version.
+        Retraining under the same name rewrites the artifact, so the next
+        call loads the new model."""
+        path = self.registry.data_path(self.name)
+        version = _artifact_version(path)
+        if self._fitted is None or self._fitted[0] != version:
+            self._fitted = (version, PipelineModel.load(path))
+        return self._fitted[1]
 
     def meta(self) -> dict:
         return self.registry.read_meta(self.name)
@@ -164,13 +173,17 @@ class Model:
             ep_name,
             {"artifact_type": "endpoint", "status": "deployed", "model": self.name},
         )
-        return Endpoint(
-            self.name, endpoint_name=ep_name, spark=self.spark,
-            warehouse=self.registry.warehouse,
-        )
+        return Endpoint(self, endpoint_name=ep_name)
 
     def delete(self) -> None:
         self.registry.delete(self.name)
+
+
+def _artifact_version(path: str) -> tuple[int, int]:
+    """Identity of a saved pipeline: its metadata dir, which every
+    overwrite-save deletes and writes anew."""
+    st = os.stat(os.path.join(path, "metadata"))
+    return st.st_ino, st.st_mtime_ns
 
 
 class InferenceResult:
@@ -180,23 +193,27 @@ class InferenceResult:
 
 
 class Endpoint:
-    """Local endpoint = model.transform (no chunked CSV/HTTP hop)."""
+    """Local endpoint = model.transform (no chunked CSV/HTTP hop).
+
+    Like a SageMaker container's model_fn, it keeps its model's fitted
+    pipeline loaded between requests and reloads it only when the
+    artifact on disk is rewritten (Model.pipeline). Pass a Model to share
+    its loaded pipeline, or a model name to load it on first use."""
 
     def __init__(
         self,
-        model_name: str,
+        model: str | Model,
         endpoint_name: str | None = None,
         spark: SparkSession | None = None,
         warehouse: str | None = None,
     ):
-        from workbench_spark.session import get_spark
+        if not isinstance(model, Model):
+            model = Model(model, spark=spark, warehouse=warehouse)
+        self.model = model
+        self.spark = model.spark
+        self.name = endpoint_name or f"{model.name}_end"
 
-        self.spark = spark or get_spark()
-        self.model = Model(model_name, spark=self.spark, warehouse=warehouse)
-        self.name = endpoint_name or f"{model_name}_end"
-
-    def _predict(self, df: DataFrame) -> DataFrame:
-        meta = self.model.meta()
+    def _predict(self, df: DataFrame, meta: dict) -> DataFrame:
         out = self.model.pipeline().transform(df)
         if meta["model_type"] == "classifier":
             labels = meta["class_labels"]
@@ -213,7 +230,7 @@ class Endpoint:
 
         meta = self.model.meta()
         target = meta["target"]
-        preds = self._predict(eval_df)
+        preds = self._predict(eval_df, meta)
         if meta["model_type"] == "classifier":
             preds = preds.withColumnRenamed("prediction", "prediction_idx").withColumnRenamed(
                 "prediction_label", "prediction"
@@ -272,7 +289,7 @@ class Endpoint:
         return InferenceResult(clean, stats)
 
     def transform(self, df: DataFrame) -> DataFrame:
-        return self._predict(df)
+        return self._predict(df, self.model.meta())
 
     def monitor(self) -> "Monitor":
         """The endpoint's Monitor (reference api/endpoint.py:
@@ -325,8 +342,7 @@ def cross_fold_metrics(
             spark=spark,
             warehouse=warehouse,
         )
-        ep = Endpoint(m.name, spark=m.spark, warehouse=m.registry.warehouse)
-        res = ep.inference(test_df.drop("__fold"), capture=False)
+        res = Endpoint(m).inference(test_df.drop("__fold"), capture=False)
         all_metrics.append({"fold": fold, **res.metrics})
         all_preds.append(res.df.withColumn("fold", F.lit(fold)))
         m.delete()

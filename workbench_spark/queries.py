@@ -1928,14 +1928,16 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §3.2 semi-join reduction (r16): every lineitem row entering the
     # (partkey, suppkey) join already passed the red-part filter, so
     # partsupp rows for non-red parts can never match — prune the BUILT
-    # partsupp side with a broadcast semi-join on the (small, filtered)
-    # part-key set BEFORE its exchange instead of generating + shuffling
-    # the full table (the filter is ~4% selective; the optimizer cannot
-    # infer it transitively across the composite join key, and Spark's
-    # automatic runtime bloom filter does not fire on a derived —
-    # scan-less — creation side). Pure pruning: result rows unchanged.
+    # partsupp side with a semi-join on the filtered part-key set BEFORE
+    # its exchange instead of shuffling the full table (the filter is ~4%
+    # selective; the optimizer cannot infer it transitively across the
+    # composite join key, and Spark's automatic runtime bloom filter does
+    # not fire on a derived — scan-less — creation side). No broadcast
+    # hint: part scales with SF, so AQE picks the join strategy (it
+    # broadcasts while the filtered key set fits). Pure pruning: result
+    # rows unchanged.
     ps = synthetic_partsupp(spark, sf_dir).join(
-        F.broadcast(p.select(F.col("p_partkey").alias("__red_pk"))),
+        p.select(F.col("p_partkey").alias("__red_pk")),
         F.col("ps_partkey") == F.col("__red_pk"),
         "leftsemi",
     )
