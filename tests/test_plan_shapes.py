@@ -466,12 +466,12 @@ def test_r15_single_eval_shapes(spark):
     2. cms_heavy_hitters plans ZERO interpreted per-character polynomial
        folds (both passes use the codegen'd xxhash64 bucket family; the
        output is exact for any hash family so nothing pins the poly).
-    3. jaccard_prefix_pairs scans its parquet input at most twice (the
-       ordered shingle frame is checkpointed once for the prefix
-       self-join AND the verify sides; pre-r15 the plan held 4 scans /
-       8 Generates).
+    3. jaccard_prefix_pairs and containment_pairs each scan their parquet
+       input at most twice (the ordered shingle frame both build through
+       one shared prefix stage is checkpointed once for the prefix join
+       AND the verify sides; pre-r15 the plan held 4 scans / 8 Generates).
     """
-    from workbench_spark.operators.dedup import jaccard_prefix_pairs
+    from workbench_spark.operators.dedup import containment_pairs, jaccard_prefix_pairs
     from workbench_spark.operators.similarity import cosine_knn
     from workbench_spark.operators.sketches import cms_heavy_hitters
     from workbench_spark.session import read_table
@@ -502,13 +502,13 @@ def test_r15_single_eval_shapes(spark):
         "prefilter must stay on the codegen'd xxhash64 family (_bucket_xx)"
     )
 
-    pp_plan = plan_of(jaccard_prefix_pairs(d.filter("doc_id < 50")))
-    n_scans = pp_plan.count("Scan parquet")
-    assert n_scans <= 2, (
-        f"jaccard_prefix_pairs plans {n_scans} parquet scans (expected <= "
-        f"2) — the ordered shingle frame must stay localCheckpoint'd and "
-        f"feed prefix AND verify sides"
-    )
+    for op in (jaccard_prefix_pairs, containment_pairs):
+        n_scans = plan_of(op(d.filter("doc_id < 50"))).count("Scan parquet")
+        assert n_scans <= 2, (
+            f"{op.__name__} plans {n_scans} parquet scans (expected <= 2) — "
+            f"the ordered shingle frame must stay localCheckpoint'd and feed "
+            f"prefix AND verify sides"
+        )
 
 
 def test_r15_pq_knn_flat_lookup_shape(spark):

@@ -29,10 +29,11 @@ import io
 import json
 import math
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
+
+from tools.bench_sf1 import _timed
 
 pytestmark = [
     pytest.mark.long,
@@ -205,21 +206,6 @@ def _plan_text(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-def _timed(fn, spark, sf_dir) -> tuple[float, int]:
-    # NOT .count(): for pure-projection entries (the span-surgery family)
-    # Catalyst prunes every unused column under count() and the timing
-    # measures only the scan (r13: text_dedup_spans "ran" 50k docs in
-    # 0.2s). Hashing a struct of ALL output columns forces the full
-    # computation; the hash itself is ~ms at these output sizes.
-    t0 = time.perf_counter()
-    df = fn(spark, sf_dir)
-    row = df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64(F.struct(*[F.col(c) for c in df.columns]))).alias("h"),
-    ).first()
-    return time.perf_counter() - t0, row["n"]
 
 
 _results: dict[str, dict] = {}

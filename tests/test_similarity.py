@@ -246,6 +246,40 @@ def test_driver_matrix_gate_raises_and_is_configurable(spark, emb):
     assert fits  # default 256 MiB bound admits the test-scale frame
 
 
+def _null_first_vectors(spark):
+    """40 rows of 8-dim vectors whose FIRST row's vector is NULL."""
+    import random
+
+    rng = random.Random(0)
+    rows = [(0, None)] + [
+        (i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(1, 40)
+    ]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    assert vecs.first()["embedding"] is None
+    return vecs
+
+
+def test_lsh_knn_dim_probe_skips_null_first_row(spark):
+    """With dim=None the vector length is probed from the first NON-NULL
+    row, so a NULL first vector neither crashes the probe nor changes the
+    result: it equals the explicit dim=8 call."""
+    from workbench_spark.operators.similarity import lsh_cosine_knn
+
+    vecs = _null_first_vectors(spark)
+    explicit = sorted(map(tuple, lsh_cosine_knn(vecs, k=3, dim=8).collect()))
+    probed = sorted(map(tuple, lsh_cosine_knn(vecs, k=3).collect()))
+    assert explicit and probed == explicit
+
+
+def test_driver_matrix_gate_sees_past_null_first_row(spark):
+    """A NULL first vector must not read as dim 0 (a 0-byte estimate that
+    passes any corpus): the gate estimates 40 rows x 8 dims x 8 bytes."""
+    from workbench_spark.operators.similarity import driver_matrix_check
+
+    vecs = _null_first_vectors(spark)
+    assert driver_matrix_check(vecs, "embedding", max_bytes=100) == (False, 2560, 100)
+
+
 def test_quantize_roundtrip_error_bound(spark):
     """int8 quantization invariants: codes in [-127, 127], per-component
     reconstruction error <= scale/2 + ulp, zero vectors stay zero, and

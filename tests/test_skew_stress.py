@@ -241,7 +241,7 @@ SKEW_SCALE_SUBSET = [
 def _timed2(fn, spark, sf_dir) -> float:
     """min-of-2 full-evaluation timing (hash-of-struct, not count — the
     scale-smoke lesson: Catalyst prunes unused columns under count())."""
-    from tests.test_scale_smoke import _timed
+    from tools.bench_sf1 import _timed
 
     return min(_timed(fn, spark, sf_dir)[0], _timed(fn, spark, sf_dir)[0])
 

@@ -54,9 +54,12 @@ DEFAULT_QUERIES = [
 
 
 def _timed(fn, spark, sf_dir) -> tuple[float, int]:
-    """Full-evaluation timing: hash-of-struct over every output column
-    (same action as tests/test_scale_smoke._timed — count() alone lets
-    Catalyst prune the computed columns)."""
+    """Full-evaluation timing: (seconds, rows) for building ``fn``'s frame
+    and hashing a struct of ALL its output columns. NOT .count(): for
+    pure-projection entries (the span-surgery family) Catalyst prunes
+    every unused column under count() and the timing measures only the
+    scan (r13: text_dedup_spans "ran" 50k docs in 0.2s). The hash itself
+    is ~ms at these output sizes."""
     from pyspark.sql import functions as F
 
     t0 = time.perf_counter()

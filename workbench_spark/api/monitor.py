@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from workbench_spark.api.model import Model
-from workbench_spark.api.registry import Registry
+from workbench_spark.api.registry import Registry, read_json, write_json
 
 
 class Monitor:
@@ -106,21 +106,6 @@ class Monitor:
             )
         return Model(model_name, spark=self.spark, warehouse=self.registry.warehouse)
 
-    @staticmethod
-    def _read_json(path: str):
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
-
-    @staticmethod
-    def _write_json(path: str, value) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(value, f, default=str)
-        os.replace(tmp, path)
-
     # ---------------------------------------------------- summary / details
     def summary(self) -> dict:
         """Monitoring-configuration summary (monitor_core.py:81-100; the
@@ -147,7 +132,7 @@ class Monitor:
                     "statistics_json_file": self.statistics_json_file,
                 }
             )
-        sched = self._read_json(self.schedule_json_file)
+        sched = read_json(self.schedule_json_file)
         if sched is not None:
             result.update(
                 {
@@ -268,10 +253,10 @@ class Monitor:
             else:
                 constraints["features"][c] = {"completeness": non_null}
             statistics.append(entry)
-        self._write_json(
+        write_json(
             self.statistics_json_file, {"dataset": {"item_count": n_rows}, "features": statistics}
         )
-        self._write_json(self.constraints_json_file, constraints)
+        write_json(self.constraints_json_file, constraints)
 
     def get_baseline(self) -> DataFrame | None:
         """The baseline rows (monitor_core.py:260-271), None if absent."""
@@ -281,12 +266,12 @@ class Monitor:
 
     def get_constraints(self) -> dict | None:
         """constraints.json content (monitor_core.py:273-279)."""
-        return self._read_json(self.constraints_json_file)
+        return read_json(self.constraints_json_file)
 
     def get_statistics(self) -> DataFrame | None:
         """statistics.json per-feature rows as a DataFrame
         (monitor_core.py:281-288), None if absent."""
-        stats = self._read_json(self.statistics_json_file)
+        stats = read_json(self.statistics_json_file)
         if stats is None:
             return None
         rows = stats["features"]
@@ -311,7 +296,7 @@ class Monitor:
                 constraints.setdefault("features", {}).setdefault(key, {}).update(
                     updates
                 )
-        self._write_json(self.constraints_json_file, constraints)
+        write_json(self.constraints_json_file, constraints)
         return True
 
     # ------------------------------------------------------------ schedule
@@ -326,7 +311,7 @@ class Monitor:
                 "create a baseline before the monitoring schedule "
                 "(create_baseline())"
             )
-        self._write_json(
+        write_json(
             self.schedule_json_file,
             {
                 "name": self.monitoring_schedule_name,
@@ -594,7 +579,7 @@ class Monitor:
     def _append_execution(self, record: dict) -> dict:
         os.makedirs(self.executions_dir, exist_ok=True)
         fname = f"execution_{record['scheduled_time']:.6f}.json"
-        self._write_json(os.path.join(self.executions_dir, fname), record)
+        write_json(os.path.join(self.executions_dir, fname), record)
         return record
 
     def _executions(self) -> list[dict]:
@@ -602,7 +587,7 @@ class Monitor:
             return []
         out = []
         for f in sorted(os.listdir(self.executions_dir), reverse=True):
-            rec = self._read_json(os.path.join(self.executions_dir, f))
+            rec = read_json(os.path.join(self.executions_dir, f))
             if rec is not None:
                 out.append(rec)
         return out

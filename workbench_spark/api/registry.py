@@ -34,6 +34,25 @@ def validate_name(name: str) -> str:
     return clean
 
 
+def read_json(path: str):
+    """The JSON document at ``path``, or None when the file is absent."""
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def write_json(path: str, value) -> None:
+    """Write ``value`` as JSON atomically: a per-process temp file, then
+    os.replace, so a concurrent reader sees the old or the new document,
+    never a partial one."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + f".tmp.{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump(value, f, default=str)
+    os.replace(tmp, path)
+
+
 class Registry:
     def __init__(self, warehouse: str | None = None):
         self.warehouse = os.path.abspath(warehouse or DEFAULT_WAREHOUSE)
@@ -51,18 +70,10 @@ class Registry:
 
     # -- metadata --------------------------------------------------------
     def read_meta(self, name: str) -> dict:
-        p = self.meta_path(name)
-        if not os.path.exists(p):
-            return {}
-        with open(p) as f:
-            return json.load(f)
+        return read_json(self.meta_path(name)) or {}
 
     def write_meta(self, name: str, meta: dict) -> None:
-        os.makedirs(self.artifact_dir(name), exist_ok=True)
-        tmp = self.meta_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f, default=str)
-        os.replace(tmp, self.meta_path(name))
+        write_json(self.meta_path(name), meta)
 
     def upsert_meta(self, name: str, updates: dict) -> dict:
         meta = self.read_meta(name)

@@ -195,6 +195,89 @@ def ngram_jaccard_pairs(
     return out.filter(F.col("jaccard") >= threshold)
 
 
+def _ppjoin_prefix(
+    df: DataFrame, text_col: str, id_col: str, n: int, threshold: tuple[int, int]
+) -> tuple[int, int, DataFrame, DataFrame]:
+    """PPJoin prefix stage shared by jaccard_prefix_pairs and
+    containment_pairs. Returns (t_num, t_den, ordered, prefix): the
+    validated threshold fraction, the per-doc canonical-order frame
+    (id, sz, __ord, __plen) and its prefix explode (id, sz, p, g) with
+    p the 1-based canonical position of shingle g."""
+    t_num, t_den = threshold
+    if not (0 < t_num <= t_den):
+        raise ValueError(f"threshold must be a proper fraction, got {threshold}")
+    sh = (
+        shingle_frame(df, text_col, id_col, n, "sh", min_len=n)
+        .withColumnRenamed(id_col, "id")
+        .withColumn("sz", F.size("sh"))
+    )
+    exploded = sh.select("id", "sz", F.explode("sh").alias("g"))
+    dfreq = exploded.groupBy("g").agg(F.count(F.lit(1)).alias("__df"))
+    # per-doc shingle list in the global (df, shingle) canonical order;
+    # prefix = the first sz - ceil(t*sz) + 1 entries (rarest first)
+    # The ordered frame feeds FOUR consumers (the two prefix-join sides —
+    # the containment index is the second one — and both verify sides)
+    # and its lineage holds the shingle pipeline plus TWO shuffles (dfreq
+    # join + collect_list groupBy); Spark self-joins never reuse a
+    # subtree, so without materialization the whole pipeline executed 4×
+    # per query (plan before r15: 8 Generate nodes, 4 parquet scans).
+    # localCheckpoint = the documented shape for multi-consumed
+    # shuffle-bearing frames (repo build notes); lazy (the first action
+    # materializes it once, no extra barrier job).
+    ordered = (
+        exploded.join(dfreq, "g")
+        .groupBy("id", "sz")
+        .agg(F.array_sort(F.collect_list(F.struct("__df", "g"))).alias("__ord"))
+        .withColumn(
+            "__plen",
+            F.col("sz")
+            - F.expr(f"(({t_num} * sz + {t_den - 1}) div {t_den})")
+            + F.lit(1),
+        )
+        .localCheckpoint(eager=False)
+    )
+    prefix = ordered.select(
+        "id",
+        "sz",
+        F.posexplode(F.expr("slice(__ord, 1, __plen)")).alias("__p", "__e"),
+    ).select(
+        "id", "sz", (F.col("__p") + 1).alias("p"), F.col("__e.g").alias("g")
+    )
+    return t_num, t_den, ordered, prefix
+
+
+def _ppjoin_verify(
+    ordered: DataFrame, cand: DataFrame, id_a: str, id_b: str, sizes: list[str]
+) -> DataFrame:
+    """Exact intersection of the prefix candidates ``cand`` (id_a, id_b,
+    *sizes, __alpha, __pam): returns (id_a, id_b, *sizes, inter).
+
+    The count runs over the candidates' FULL shingle sets — __ord holds
+    every shingle of the doc exactly once (shingle sets are
+    array_distinct), so the verify sides re-explode the CHECKPOINTED
+    frame instead of re-running the shingle pipeline. r16: the first
+    α−1 common tokens are already counted by the prefix join, and the
+    common tokens NOT yet counted are exactly those with A-position
+    ≥ pa_α (positions increase with canonical rank, so pos_A ≤ pa_α ⟺
+    first α common tokens) — the A side keeps only the tail at/after
+    pa_α (the α-th token itself stays, guaranteeing ≥1 verify row per
+    candidate), and inter = (α−1) + count."""
+    ea = ordered.select(
+        F.col("id").alias(id_a), F.posexplode("__ord.g").alias("__pa0", "g")
+    ).select(id_a, (F.col("__pa0") + 1).alias("pa"), "g")
+    eb = ordered.select(F.col("id").alias(id_b), F.explode("__ord.g").alias("g"))
+    return (
+        cand.join(ea, id_a)
+        .filter(F.col("pa") >= F.col("__pam"))
+        .join(eb, [id_b, "g"])
+        .groupBy(id_a, id_b, *sizes, "__alpha")
+        .agg(F.count(F.lit(1)).alias("__cnt"))
+        .select(
+            id_a, id_b, *sizes, (F.col("__alpha") - 1 + F.col("__cnt")).alias("inter")
+        )
+    )
+
+
 def jaccard_prefix_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -232,45 +315,7 @@ def jaccard_prefix_pairs(
     phase touches only surviving candidates (candidate × doc-shingles
     equi-joins + one combinable count). No windows, no cross products.
     """
-    t_num, t_den = threshold
-    if not (0 < t_num <= t_den):
-        raise ValueError(f"threshold must be a proper fraction, got {threshold}")
-    sh = (
-        shingle_frame(df, text_col, id_col, n, "sh", min_len=n)
-        .withColumnRenamed(id_col, "id")
-        .withColumn("sz", F.size("sh"))
-    )
-    exploded = sh.select("id", "sz", F.explode("sh").alias("g"))
-    dfreq = exploded.groupBy("g").agg(F.count(F.lit(1)).alias("__df"))
-    # per-doc shingle list in the global (df, shingle) canonical order;
-    # prefix = the first sz - ceil(t*sz) + 1 entries (rarest first)
-    # The ordered frame feeds FOUR consumers (both prefix-join sides and
-    # both verify sides) and its lineage holds the shingle pipeline plus
-    # TWO shuffles (dfreq join + collect_list groupBy); Spark self-joins
-    # never reuse a subtree, so without materialization the whole
-    # pipeline executed 4× per query (plan before r15: 8 Generate nodes,
-    # 4 parquet scans). localCheckpoint = the documented shape for
-    # multi-consumed shuffle-bearing frames (CLAUDE.md); lazy (the first
-    # action materializes it once, no extra barrier job).
-    ordered = (
-        exploded.join(dfreq, "g")
-        .groupBy("id", "sz")
-        .agg(F.array_sort(F.collect_list(F.struct("__df", "g"))).alias("__ord"))
-        .withColumn(
-            "__plen",
-            F.col("sz")
-            - F.expr(f"(({t_num} * sz + {t_den - 1}) div {t_den})")
-            + F.lit(1),
-        )
-        .localCheckpoint(eager=False)
-    )
-    prefix = ordered.select(
-        "id",
-        "sz",
-        F.posexplode(F.expr("slice(__ord, 1, __plen)")).alias("__p", "__e"),
-    ).select(
-        "id", "sz", (F.col("__p") + 1).alias("p"), F.col("__e.g").alias("g")
-    )
+    t_num, t_den, ordered, prefix = _ppjoin_prefix(df, text_col, id_col, n, threshold)
     # PPJoin positional filter, accumulated-overlap form (Xiao et al.
     # 2008 §4; r16 — tightens the r15 first-match bound). Common tokens
     # of A and B appear in the same relative order in both lists (one
@@ -321,34 +366,7 @@ def jaccard_prefix_pairs(
         )
         .drop("__pbm")
     )
-    # verify: exact intersection over the candidates' FULL shingle sets —
-    # __ord holds every shingle of the doc exactly once (shingle sets are
-    # array_distinct), so the verify sides re-explode the CHECKPOINTED
-    # frame instead of re-running the shingle pipeline. r16: the first
-    # α−1 common tokens are already counted by the prefix join, and the
-    # common tokens NOT yet counted are exactly those with A-position
-    # ≥ pa_α (positions increase with canonical rank, so pos_A ≤ pa_α ⟺
-    # first α common tokens) — the A side keeps only the tail at/after
-    # pa_α (the α-th token itself stays, guaranteeing ≥1 verify row per
-    # candidate), and inter = (α−1) + count.
-    ea = ordered.select(
-        F.col("id").alias("id_a"), F.posexplode("__ord.g").alias("__pa0", "g")
-    ).select("id_a", (F.col("__pa0") + 1).alias("pa"), "g")
-    eb = ordered.select(F.col("id").alias("id_b"), F.explode("__ord.g").alias("g"))
-    inter = (
-        cand.join(ea, "id_a")
-        .filter(F.col("pa") >= F.col("__pam"))
-        .join(eb, ["id_b", "g"])
-        .groupBy("id_a", "id_b", "sz_a", "sz_b", "__alpha")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-        .select(
-            "id_a",
-            "id_b",
-            "sz_a",
-            "sz_b",
-            (F.col("__alpha") - 1 + F.col("__cnt")).alias("inter"),
-        )
-    )
+    inter = _ppjoin_verify(ordered, cand, "id_a", "id_b", ["sz_a", "sz_b"])
     return inter.select(
         "id_a",
         "id_b",
@@ -385,38 +403,7 @@ def containment_pairs(
 
     Self-pairs are excluded; both directions of a near-identical pair
     legitimately both qualify."""
-    t_num, t_den = threshold
-    if not (0 < t_num <= t_den):
-        raise ValueError(f"threshold must be a proper fraction, got {threshold}")
-    sh = (
-        shingle_frame(df, text_col, id_col, n, "sh", min_len=n)
-        .withColumnRenamed(id_col, "id")
-        .withColumn("sz", F.size("sh"))
-    )
-    exploded = sh.select("id", "sz", F.explode("sh").alias("g"))
-    dfreq = exploded.groupBy("g").agg(F.count(F.lit(1)).alias("__df"))
-    ordered = (
-        exploded.join(dfreq, "g")
-        .groupBy("id", "sz")
-        .agg(F.array_sort(F.collect_list(F.struct("__df", "g"))).alias("__ord"))
-        .withColumn(
-            "__plen",
-            F.col("sz")
-            - F.expr(f"(({t_num} * sz + {t_den - 1}) div {t_den})")
-            + F.lit(1),
-        )
-        # multi-consumed (prefix + container index + both verify sides)
-        # with two shuffles in its lineage — materialize once, see the
-        # jaccard_prefix_pairs note (r15 opt)
-        .localCheckpoint(eager=False)
-    )
-    prefix = ordered.select(
-        "id",
-        "sz",
-        F.posexplode(F.expr("slice(__ord, 1, __plen)")).alias("__p", "__e"),
-    ).select(
-        "id", "sz", (F.col("__p") + 1).alias("p"), F.col("__e.g").alias("g")
-    )
+    t_num, t_den, ordered, prefix = _ppjoin_prefix(df, text_col, id_col, n, threshold)
     full = ordered.select(
         F.col("id").alias("id_container"),
         F.col("sz").alias("sz_container"),
@@ -471,30 +458,7 @@ def containment_pairs(
         )
         .select("id_contained", "id_container", "sz_contained", "__alpha", "__pam")
     )
-    # verify (r16): the first α−1 common tokens are already counted by
-    # the prefix join; only A-positions ≥ p_α can hold uncounted common
-    # tokens (the α-th itself stays — ≥1 verify row per candidate), and
-    # inter = (α−1) + count. See jaccard_prefix_pairs.
-    ea = ordered.select(
-        F.col("id").alias("id_contained"),
-        F.posexplode("__ord.g").alias("__pa0", "g"),
-    ).select("id_contained", (F.col("__pa0") + 1).alias("pa"), "g")
-    eb = ordered.select(
-        F.col("id").alias("id_container"), F.explode("__ord.g").alias("g")
-    )
-    inter = (
-        cand.join(ea, "id_contained")
-        .filter(F.col("pa") >= F.col("__pam"))
-        .join(eb, ["id_container", "g"])
-        .groupBy("id_contained", "id_container", "sz_contained", "__alpha")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-        .select(
-            "id_contained",
-            "id_container",
-            "sz_contained",
-            (F.col("__alpha") - 1 + F.col("__cnt")).alias("inter"),
-        )
-    )
+    inter = _ppjoin_verify(ordered, cand, "id_contained", "id_container", ["sz_contained"])
     return inter.select(
         "id_contained",
         "id_container",
@@ -558,6 +522,16 @@ def _band_hash_sql(bands: int, r: int) -> str:
         )
         + ")"
     )
+
+
+def _agreement(sig_a: str, sig_b: str, n_hashes: int):
+    """Estimated Jaccard of two MinHash signature columns: the fraction
+    of the ``n_hashes`` slots on which they agree."""
+    return F.aggregate(
+        F.zip_with(sig_a, sig_b, lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    ) / F.lit(n_hashes)
 
 
 def _star_threshold_guard(message: str, df: DataFrame, strict: bool | None) -> None:
@@ -633,6 +607,11 @@ def minhash_lsh_pairs(
     documented at the call site); leave None (default) for the
     recall-certified oracle entries. The cap check is one count window on
     the same (band, bh) key the join shuffles on — no extra shuffle.
+
+    ``persist_signatures=True`` materializes the banded signature frame
+    once with an eager localCheckpoint before the pair join, so the two
+    join sides read stored blocks instead of each recomputing the
+    signatures; False (default) leaves the frame lazy.
     """
     if pair_mode not in ("all", "star"):
         raise ValueError(f"pair_mode must be 'all' or 'star', got {pair_mode!r}")
@@ -654,40 +633,21 @@ def minhash_lsh_pairs(
             df,
             strict,
         )
-    r = n_hashes // bands
-    sigs = minhash_signature(df, text_col, id_col, n_hashes, shingle_n)
-    # band key b = hash of signature slots [b*r, (b+1)*r) — minhash is a
-    # multi-referenced non-cheap projection, so it stays materialized
-    # per-row (not re-inlined per band); single expr string (py4j cost)
-    banded = sigs.select(
-        F.col(id_col).alias("id"),
-        F.col("minhash"),
-        F.posexplode(F.expr(_band_hash_sql(bands, r))).alias("band", "bh"),
-    )
+    banded = banded_minhash(df, text_col, id_col, n_hashes, bands, shingle_n)
     # Self-join: Spark's alias dedup re-keys one side's attributes, so the
     # two shuffle inputs never canonicalize identically and the signature
-    # pipeline is computed once per side (verified: no ReusedExchange).
-    # That is a constant 2x on a map-side-cheap stage; for deliberate reuse
-    # at scale, persist_signatures=True pins the banded frame (caller
-    # should unpersist via banded.unpersist() semantics — Spark evicts LRU
-    # otherwise).
-    if persist_signatures == "persist":
-        # fault-tolerant variant for long-lived cluster jobs: lost blocks
-        # recompute from lineage (localCheckpoint blocks do NOT — an
-        # executor loss after checkpoint fails the job). Costs the 2x
-        # signature compute on this self-join (no ReusedExchange).
-        banded = banded.persist()
-    elif persist_signatures:
-        # Eager localCheckpoint materializes the banded signatures ONCE and
-        # truncates lineage, so the self-join provably scans the stored
-        # blocks instead of recomputing the 32-hash signature pipeline per
-        # side (persist() alone left both sides computing: the alias dedup
-        # re-keys attributes, no ReusedExchange, and the driver bench showed
-        # the 2x never went away). Unlike persist(), the blocks are released
-        # by the ContextCleaner when the frame is GC'd — no session-lifetime
-        # cache leak. Tradeoff: lineage truncation trades executor-loss
-        # fault tolerance for the guaranteed single compute — right for
-        # bench/batch runs; pass "persist" on lossy long-lived clusters.
+    # pipeline is computed once per side (verified: no ReusedExchange) —
+    # a constant 2x on a map-side-cheap stage. persist_signatures=True
+    # removes it with an eager localCheckpoint: the banded signatures are
+    # materialized ONCE and lineage is truncated, so the self-join
+    # provably scans the stored blocks instead of recomputing the 32-hash
+    # signature pipeline per side (persist() alone left both sides
+    # computing, and bench.py showed the 2x never went away).
+    # Unlike persist(), the blocks are released by the ContextCleaner when
+    # the frame is GC'd — no session-lifetime cache leak. Tradeoff: an
+    # executor loss after the checkpoint fails the job (localCheckpoint
+    # blocks do not recompute from lineage) — right for bench/batch runs.
+    if persist_signatures:
         banded = banded.localCheckpoint(eager=True)
     if pair_mode == "star":
         # One shuffle on (band, bh) + per-bucket min — candidate volume
@@ -703,19 +663,10 @@ def minhash_lsh_pairs(
         starred = banded.select("id", "minhash", "band", "bh").withColumn(
             "__hub", hub
         )
-        est_star = F.aggregate(
-            F.zip_with(
-                F.col("minhash"),
-                F.col("__hub.minhash"),
-                lambda x, y: F.when(x == y, 1).otherwise(0),
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        ) / F.lit(n_hashes)
         out = starred.filter(F.col("id") != F.col("__hub.id")).select(
             F.col("__hub.id").alias("id_a"),
             F.col("id").alias("id_b"),
-            est_star.alias("est_jaccard"),
+            _agreement("minhash", "__hub.minhash", n_hashes).alias("est_jaccard"),
         )
         if verify_threshold is not None:
             out = out.filter(F.col("est_jaccard") >= verify_threshold)
@@ -730,11 +681,7 @@ def minhash_lsh_pairs(
             .drop("__bsz")
         )
     a, b = banded.alias("a"), banded.alias("b")
-    est = F.aggregate(
-        F.zip_with("a.minhash", "b.minhash", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(n_hashes)
+    est = _agreement("a.minhash", "b.minhash", n_hashes)
     # est is computed BEFORE the pair dedupe: a near-exact dup matches on
     # ~all bands, so the pre-dedupe stream is up to `bands`x the pair count
     # — but est is a 32-slot scalar fold, while deduping first would carry
@@ -860,13 +807,7 @@ def minhash_lsh_dedup(
         drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
         return df.join(drop, id_col, "left_anti")
 
-    r = n_hashes // bands
-    sigs = minhash_signature(df, text_col, id_col, n_hashes, shingle_n)
-    banded = sigs.select(
-        F.col(id_col).alias("id"),
-        F.col("minhash"),
-        F.posexplode(F.expr(_band_hash_sql(bands, r))).alias("band", "bh"),
-    )
+    banded = banded_minhash(df, text_col, id_col, n_hashes, bands, shingle_n)
     reps = banded.groupBy("band", "bh").agg(F.min("id").alias("rep_id"))
     rep_sigs = banded.select(
         F.col("band"), F.col("bh"), F.col("id").alias("rep_id"), F.col("minhash").alias("__mr")
@@ -875,12 +816,7 @@ def minhash_lsh_dedup(
     cands = members.join(
         rep_sigs.join(reps, ["band", "bh", "rep_id"], "left_semi"), ["band", "bh", "rep_id"]
     )
-    est = F.aggregate(
-        F.zip_with("minhash", "__mr", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(n_hashes)
-    verified = cands.withColumn("__est", est)
+    verified = cands.withColumn("__est", _agreement("minhash", "__mr", n_hashes))
     if verify_threshold is not None:
         verified = verified.filter(F.col("__est") >= verify_threshold)
     drop = verified.select(F.col("id").alias(id_col)).distinct()
@@ -905,6 +841,9 @@ def banded_minhash(
     instead of re-hashing the corpus."""
     r = n_hashes // bands
     sigs = minhash_signature(df, text_col, id_col, n_hashes, shingle_n)
+    # band key b = hash of signature slots [b*r, (b+1)*r) — minhash is a
+    # multi-referenced non-cheap projection, so it stays materialized
+    # per-row (not re-inlined per band); single expr string (py4j cost)
     return sigs.select(
         F.col(id_col).alias("id"),
         F.col("minhash"),
@@ -945,11 +884,7 @@ def minhash_incremental_pairs(
         else banded_minhash(corpus, text_col, id_col, n_hashes, bands, shingle_n)
     )
     a, b = new_banded.alias("a"), corpus_banded.alias("b")
-    est = F.aggregate(
-        F.zip_with("a.minhash", "b.minhash", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(n_hashes)
+    est = _agreement("a.minhash", "b.minhash", n_hashes)
     out = a.join(
         b,
         (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")),
@@ -1239,7 +1174,7 @@ def embedding_near_dup_pairs(
       cosine + threshold within buckets. Near-dups at high thresholds
       collide with probability 1-(1-(1-θ/π)^b)^t; recall dial = n_tables.
     """
-    from workbench_spark.operators.similarity import _dot, _norm
+    from workbench_spark.operators.similarity import _norm, driver_matrix_check
 
     if on_overflow not in ("reroute", "raise"):
         raise ValueError(
@@ -1247,58 +1182,22 @@ def embedding_near_dup_pairs(
         )
     if use_lsh:
         cands = _lsh_embedding_candidates(df, id_col, vec_col, **lsh_kwargs)
-        scored = cands.select(
-            "id_a",
-            "id_b",
-            (_dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))).alias(
-                "cosine_sim"
-            ),
-        )
-        return scored.filter(F.col("cosine_sim") >= threshold)
+        return _cosine_pairs(cands, "id_a", "id_b", threshold)
 
-    if method == "blas":
-        # Gate the driver-collect IN CODE, not just docs: above the
-        # configurable bound, auto-route to the LSH scale path instead of
-        # materializing the full matrix on the driver.
-        from workbench_spark.operators.similarity import driver_matrix_check
-
-        fits, est, limit = driver_matrix_check(df, vec_col)
-        if not fits:
-            if on_overflow == "raise":
-                raise RuntimeError(
-                    f"embedding_near_dup_pairs(method='blas', "
-                    f"on_overflow='raise'): ~{est >> 20} MiB driver "
-                    f"footprint exceeds the {limit >> 20} MiB bound; the "
-                    f"exact path was explicitly required. Use use_lsh=True "
-                    f"for the approximate scale path, or raise "
-                    f"spark.workbench.driverMatrix.maxBytes."
-                )
-            import warnings
-
-            warnings.warn(
-                f"embedding_near_dup_pairs(method='blas') would collect "
-                f"~{est >> 20} MiB onto the driver (limit {limit >> 20} MiB); "
-                f"routing to the hyperplane-LSH path (use_lsh=True).",
-                stacklevel=2,
-            )
-            return embedding_near_dup_pairs(
-                df, id_col, vec_col, threshold, use_lsh=True, **lsh_kwargs
-            )
-        return _blas_threshold_pairs(df, id_col, vec_col, threshold)
-
-    # Gate the default exact path exactly like 'blas': the broadcast side
-    # is materialized on the driver before shipping, so driver_matrix_check
-    # is the right footprint estimate for the BroadcastNestedLoopJoin too.
-    # Above the bound, an unbounded-corpus default call reroutes to LSH
-    # instead of attempting an O(N²) broadcast cross.
-    from workbench_spark.operators.similarity import driver_matrix_check
-
+    # Gate the driver-side matrix IN CODE, not just docs, for BOTH exact
+    # paths: 'blas' collects the full matrix onto the driver, and 'expr'
+    # materializes its broadcast side there before shipping, so
+    # driver_matrix_check is the right footprint estimate for the
+    # BroadcastNestedLoopJoin too. Above the configurable bound, an
+    # unbounded-corpus call reroutes to the LSH scale path instead of an
+    # O(N²) broadcast cross or a driver OOM.
     fits, est, limit = driver_matrix_check(df, vec_col)
     if not fits:
+        exact = "blas" if method == "blas" else "expr"
         if on_overflow == "raise":
             raise RuntimeError(
-                f"embedding_near_dup_pairs(method='expr', "
-                f"on_overflow='raise'): ~{est >> 20} MiB broadcast footprint "
+                f"embedding_near_dup_pairs(method='{exact}', "
+                f"on_overflow='raise'): ~{est >> 20} MiB driver footprint "
                 f"exceeds the {limit >> 20} MiB bound; the exact path was "
                 f"explicitly required. Use use_lsh=True for the approximate "
                 f"scale path, or raise spark.workbench.driverMatrix.maxBytes."
@@ -1306,9 +1205,9 @@ def embedding_near_dup_pairs(
         import warnings
 
         warnings.warn(
-            f"embedding_near_dup_pairs(method='expr') would broadcast "
-            f"~{est >> 20} MiB of vectors (limit {limit >> 20} MiB) into an "
-            f"O(N²) cross join; routing to the hyperplane-LSH path "
+            f"embedding_near_dup_pairs(method='{exact}') would hold "
+            f"~{est >> 20} MiB of vectors on the driver (limit "
+            f"{limit >> 20} MiB); routing to the hyperplane-LSH path "
             f"(use_lsh=True). Pass use_lsh=True explicitly (or raise "
             f"spark.workbench.driverMatrix.maxBytes) to silence this.",
             stacklevel=2,
@@ -1316,6 +1215,8 @@ def embedding_near_dup_pairs(
         return embedding_near_dup_pairs(
             df, id_col, vec_col, threshold, use_lsh=True, **lsh_kwargs
         )
+    if method == "blas":
+        return _blas_threshold_pairs(df, id_col, vec_col, threshold)
 
     a = df.select(
         F.col(id_col).alias("id_a"),
@@ -1328,14 +1229,17 @@ def embedding_near_dup_pairs(
         _norm(F.col(vec_col)).alias("__nb"),
     )
     pairs = F.broadcast(a).crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    scored = pairs.select(
-        "id_a",
-        "id_b",
-        (_dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))).alias(
-            "cosine_sim"
-        ),
-    )
-    return scored.filter(F.col("cosine_sim") >= threshold)
+    return _cosine_pairs(pairs, "id_a", "id_b", threshold)
+
+
+def _cosine_pairs(cands: DataFrame, id_a: str, id_b: str, threshold: float) -> DataFrame:
+    """(id_a, id_b, cosine_sim) for candidate pairs carrying both vectors
+    and norms as (__va, __na) and (__vb, __nb), kept at cosine >= threshold."""
+    from workbench_spark.operators.similarity import _cosine
+
+    return cands.select(
+        id_a, id_b, _cosine("__va", "__vb", "__na", "__nb").alias("cosine_sim")
+    ).filter(F.col("cosine_sim") >= threshold)
 
 
 def lsh_auto_planes(n: int, target_bucket: int = 64, floor: int = 8) -> int:
@@ -1412,16 +1316,11 @@ def embedding_signatures(
     — the signature spaces differ otherwise."""
     import random
 
-    from workbench_spark.operators.similarity import _stacked_signatures
+    from workbench_spark.operators.similarity import _stacked_signatures, _vector_dim
 
     if dim is None:
-        # first() is a full Spark job at plan-build time — hot paths should
-        # pass dim explicitly. Probe a NON-NULL row: a NULL first row would
-        # silently set dim=1, every signature would collapse to one bucket,
-        # and the candidate join would degenerate into a cross product.
-        row = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
         # empty/all-null frame: any dim keeps the plan valid, zero rows out
-        dim = 1 if row is None else len(row[0])
+        dim = _vector_dim(df, vec_col)
     rng = random.Random(seed)
     planes_per_table = [
         [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(n_planes)]
@@ -1471,8 +1370,6 @@ def embedding_incremental_pairs(
     linear cost. For the snapshot-artifact path, size the planes when
     the corpus artifact is built — re-signing is the (rare) resize
     event, exactly like re-bucketing a bucketed table."""
-    from workbench_spark.operators.similarity import _dot
-
     if n_planes == "auto":
         if corpus_is_signed:
             raise ValueError(
@@ -1484,11 +1381,12 @@ def embedding_incremental_pairs(
         # never the batch: the fan-in the rule bounds is bucket occupancy
         # on the corpus side
     if dim is None:
+        from workbench_spark.operators.similarity import _vector_dim
+
         # ONE probe shared by both sides, so they sign with identical
         # planes (independent probes could diverge on ragged data);
         # production passes dim explicitly
-        row = new_df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-        dim = 1 if row is None else len(row[0])
+        dim = _vector_dim(new_df, vec_col)
     new_signed = embedding_signatures(
         new_df, id_col, vec_col, n_planes, n_tables, seed, dim
     )
@@ -1508,14 +1406,7 @@ def embedding_incremental_pairs(
         F.col("v").alias("__vb"), F.col("nrm").alias("__nb"),
     )
     cands = a.join(b, ["tbl", "sig"]).dropDuplicates(["new_id", "corpus_id"])
-    scored = cands.select(
-        "new_id",
-        "corpus_id",
-        (_dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))).alias(
-            "cosine_sim"
-        ),
-    )
-    return scored.filter(F.col("cosine_sim") >= threshold)
+    return _cosine_pairs(cands, "new_id", "corpus_id", threshold)
 
 
 def embedding_incremental_dedup(
@@ -1708,7 +1599,7 @@ def semdedup(
     quantizer.
     """
     from workbench_spark.operators.graph import connected_components
-    from workbench_spark.operators.similarity import _dot, _norm
+    from workbench_spark.operators.similarity import _cosine, _dot, _norm
 
     if n_clusters == "auto":
         n_clusters = max(8, min(df.count() // 250, 4096))
@@ -1776,9 +1667,7 @@ def semdedup(
             "id",
             "v",
             "__n",
-            (_dot(F.col("v"), F.col("__c")) / (F.col("__n") * F.col("__cn"))).alias(
-                "centroid_sim"
-            ),
+            _cosine("v", "__c", "__n", "__cn").alias("centroid_sim"),
         )
 
     a = with_sim.select(
@@ -1792,14 +1681,7 @@ def semdedup(
     pairs = (
         a.join(b, "cluster")
         .filter(F.col("src") < F.col("dst"))
-        .select(
-            "src",
-            "dst",
-            (
-                _dot(F.col("__va"), F.col("__vb"))
-                / (F.col("__na") * F.col("__nb"))
-            ).alias("__sim"),
-        )
+        .select("src", "dst", _cosine("__va", "__vb", "__na", "__nb").alias("__sim"))
         # NaN >= x is TRUE in Spark comparisons (NaN sorts greatest): a
         # NaN-vector would edge to its whole cluster and chain-merge CC
         # components — require a real, finite similarity (r12 fuzz)

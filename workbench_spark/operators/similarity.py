@@ -61,10 +61,26 @@ def driver_matrix_check(
         return True, 0, max_bytes
     n = df.count()
     if dim is None:
-        row = df.select(vec_col).first()
-        dim = 0 if row is None or row[0] is None else len(row[0])
+        dim = _vector_dim(df, vec_col, empty=0)
     est = n * dim * 8
     return est <= max_bytes, est, max_bytes
+
+
+def _vector_dim(df: DataFrame, vec_col: str, empty: int = 1) -> int:
+    """Length of the first NON-NULL vector in ``vec_col``; ``empty`` for an
+    empty or all-NULL frame. first() is a full Spark job at plan-build
+    time — hot paths should pass dim explicitly. NULL rows are skipped: a
+    NULL first row would otherwise crash len(), or read as a degenerate
+    dim (every hyperplane signature collapses to one bucket and the
+    candidate join becomes a cross product; the driver-matrix gate
+    estimates 0 bytes and passes any corpus)."""
+    row = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
+    return empty if row is None else len(row[0])
+
+
+def _cosine(a: str, b: str, na: str, nb: str):
+    """Exact cosine of vector columns ``a``/``b`` from their norm columns."""
+    return _dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb))
 
 
 def _norm(a):
@@ -116,9 +132,7 @@ def cosine_knn(
     scored = pairs.select(
         "id",
         "neighbor_id",
-        _safe_sim(
-            _dot(F.col("__qv"), F.col("__rv")) / (F.col("__qn") * F.col("__rn"))
-        ).alias("cosine_sim"),
+        _safe_sim(_cosine("__qv", "__rv", "__qn", "__rn")).alias("cosine_sim"),
     )
     return _topk_finite(scored, k)
 
@@ -253,17 +267,29 @@ def _topk_finite(
 
 
 def _rescore_topk(
-    shortlist: DataFrame,
+    approx: DataFrame,
     vectors: DataFrame,
     id_col: str,
     vec_col: str,
     k: int,
+    r_k: int,
     queries: DataFrame | None = None,
+    ascending: bool = False,
 ) -> DataFrame:
-    """Full-precision rescore of an approximate shortlist: join the fp
-    vectors back for both endpoints (equi-joins on id — only survivors
-    touch float data), compute exact cosine, keep top-k per id. In
-    novel-query mode the id side resolves against ``queries``."""
+    """Shortlist, then full-precision rescore: keep the ``r_k`` best
+    candidates per id by the approximate score ``__approx`` (a similarity,
+    highest first — ``ascending=True`` for a distance; neighbor_id
+    tiebreak), join the fp vectors back for both endpoints (equi-joins on
+    id — only survivors touch float data), compute exact cosine, keep
+    top-k per id. In novel-query mode the id side resolves against
+    ``queries``."""
+    score = F.col("__approx").asc() if ascending else F.col("__approx").desc()
+    w = Window.partitionBy("id").orderBy(score, F.col("neighbor_id").asc())
+    shortlist = (
+        approx.withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") <= r_k)
+        .select("id", "neighbor_id")
+    )
     fp = vectors.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -291,9 +317,7 @@ def _rescore_topk(
         .select(
             "id",
             "neighbor_id",
-            _safe_sim(
-                _dot(F.col("v"), F.col("__rv")) / (F.col("nrm") * F.col("__rn"))
-            ).alias("cosine_sim"),
+            _safe_sim(_cosine("v", "__rv", "nrm", "__rn")).alias("cosine_sim"),
         )
     )
     return _topk_finite(scored, k, rn_name="__rk")
@@ -338,24 +362,18 @@ def lsh_cosine_knn(
     max(3k, k+8)) per query survive, and survivors are rescored at FULL
     precision before the final top-k — output contract identical.
     """
-    import random
+    from workbench_spark.operators.dedup import embedding_signatures, lsh_auto_planes
 
     if n_planes == "auto":
-        from workbench_spark.operators.dedup import lsh_auto_planes
-
         n_planes = lsh_auto_planes(vectors.count())
     if dim is None:
-        dim = len(vectors.select(vec_col).first()[0])
-    rng = random.Random(seed)
-    planes_per_table = [
-        [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(n_planes)]
-        for _ in range(n_tables)
-    ]
-    signed = _stacked_signatures(vectors, id_col, vec_col, planes_per_table)
+        # one probe for both sides: queries sign with the corpus' planes
+        dim = _vector_dim(vectors, vec_col)
+    signed = embedding_signatures(vectors, id_col, vec_col, n_planes, n_tables, seed, dim)
     q_signed = (
         signed
         if queries is None
-        else _stacked_signatures(queries, id_col, vec_col, planes_per_table)
+        else embedding_signatures(queries, id_col, vec_col, n_planes, n_tables, seed, dim)
     )
     if quantized:
         # int8 scan path: the candidate shuffle carries ONLY the codes
@@ -380,23 +398,10 @@ def lsh_cosine_knn(
             cands = cands.filter(F.col("id") != F.col("neighbor_id"))
         cands = cands.dropDuplicates(["id", "neighbor_id"])
         approx = cands.select(
-            "id",
-            "neighbor_id",
-            (
-                _dot(F.col("__lq"), F.col("__rq"))
-                / (F.col("__ln") * F.col("__rn8"))
-            ).alias("__approx"),
+            "id", "neighbor_id", _cosine("__lq", "__rq", "__ln", "__rn8").alias("__approx")
         )
         r_k = rescore_k if rescore_k is not None else max(3 * k, k + 8)
-        w8 = Window.partitionBy("id").orderBy(
-            F.col("__approx").desc(), F.col("neighbor_id").asc()
-        )
-        shortlist = (
-            approx.withColumn("__rk", F.row_number().over(w8))
-            .filter(F.col("__rk") <= r_k)
-            .select("id", "neighbor_id")
-        )
-        return _rescore_topk(shortlist, vectors, id_col, vec_col, k, queries=queries)
+        return _rescore_topk(approx, vectors, id_col, vec_col, k, r_k, queries=queries)
     left = q_signed.select(
         "tbl", "sig", F.col("id"), F.col("v").alias("__qv"), F.col("nrm").alias("__qn")
     )
@@ -411,9 +416,7 @@ def lsh_cosine_knn(
     scored = cands.select(
         "id",
         "neighbor_id",
-        _safe_sim(
-            _dot(F.col("__qv"), F.col("__rv")) / (F.col("__qn") * F.col("__rn"))
-        ).alias("cosine_sim"),
+        _safe_sim(_cosine("__qv", "__rv", "__qn", "__rn")).alias("cosine_sim"),
     )
     return _topk_finite(scored, k)
 
@@ -750,15 +753,7 @@ def ivf_cosine_knn(
             ).alias("__approx"),
         )
         r_k = rescore_k if rescore_k is not None else max(20 * k, 100)
-        w8 = Window.partitionBy("id").orderBy(
-            F.col("__approx").desc(), F.col("neighbor_id").asc()
-        )
-        shortlist = (
-            approx.withColumn("__rk", F.row_number().over(w8))
-            .filter(F.col("__rk") <= r_k)
-            .select("id", "neighbor_id")
-        )
-        return _rescore_topk(shortlist, vectors, id_col, vec_col, k)
+        return _rescore_topk(approx, vectors, id_col, vec_col, k, r_k)
     if quantized:
         scan = _int8_scan_frame(vectors, id_col, vec_col)
         left = probes.select(F.col("__probe").alias("cell"), "id").join(
@@ -781,23 +776,10 @@ def ivf_cosine_knn(
             .dropDuplicates(["id", "neighbor_id"])
         )
         approx = cands.select(
-            "id",
-            "neighbor_id",
-            (
-                _dot(F.col("__lq"), F.col("__rq"))
-                / (F.col("__ln") * F.col("__rn8"))
-            ).alias("__approx"),
+            "id", "neighbor_id", _cosine("__lq", "__rq", "__ln", "__rn8").alias("__approx")
         )
         r_k = rescore_k if rescore_k is not None else max(3 * k, k + 8)
-        w8 = Window.partitionBy("id").orderBy(
-            F.col("__approx").desc(), F.col("neighbor_id").asc()
-        )
-        shortlist = (
-            approx.withColumn("__rk", F.row_number().over(w8))
-            .filter(F.col("__rk") <= r_k)
-            .select("id", "neighbor_id")
-        )
-        return _rescore_topk(shortlist, vectors, id_col, vec_col, k)
+        return _rescore_topk(approx, vectors, id_col, vec_col, k, r_k)
     left = probes.select(
         F.col("__probe").alias("cell"),
         F.col("id"),
@@ -818,9 +800,7 @@ def ivf_cosine_knn(
     scored = cands.select(
         "id",
         "neighbor_id",
-        _safe_sim(
-            _dot(F.col("__qv"), F.col("__rv")) / (F.col("__qn") * F.col("__rn"))
-        ).alias("cosine_sim"),
+        _safe_sim(_cosine("__qv", "__rv", "__qn", "__rn")).alias("cosine_sim"),
     )
     return _topk_finite(scored, k, rn_name="__rn2")
 
@@ -1054,7 +1034,7 @@ def pq_train(
     import numpy as np
 
     if dim is None:
-        dim = len(vectors.select(vec_col).first()[0])
+        dim = _vector_dim(vectors, vec_col)
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sample = vectors.orderBy(F.col(id_col)).limit(sample_n).select(vec_col)
@@ -1207,7 +1187,7 @@ def pq_knn(
     O(dim) float ops to m element_at lookups. Pair PQ with the IVF cell
     join when the query set itself scales."""
     if dim is None:
-        dim = len(vectors.select(vec_col).first()[0])
+        dim = _vector_dim(vectors, vec_col)
     books = codebooks if codebooks is not None else pq_train(
         vectors, id_col, vec_col, m=m, k=n_codes, seed=seed, dim=dim
     )
@@ -1269,13 +1249,9 @@ def pq_knn(
         .select("id", "neighbor_id", F.expr(adc).alias("__approx"))
     )
     r_k = rescore_k if rescore_k is not None else max(4 * k, k + 16)
-    w = Window.partitionBy("id").orderBy(F.col("__approx").asc(), F.col("neighbor_id").asc())
-    shortlist = (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= r_k)
-        .select("id", "neighbor_id")
+    return _rescore_topk(
+        scored, vectors, id_col, vec_col, k, r_k, queries=queries, ascending=True
     )
-    return _rescore_topk(shortlist, vectors, id_col, vec_col, k, queries=queries)
 
 
 def _pq_dot_table_sql(book_j: list[list[float]]) -> str:

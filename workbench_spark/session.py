@@ -122,32 +122,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     if os.environ.get("SPARK_GRAFT_HOSTILE_PARTS"):
         df = df.repartition(int(os.environ.get("SPARK_GRAFT_HOSTILE_NPARTS", "13")))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = None):
-    """Register the driver's parquet tables as temp views; return dict of DFs.
-
-    Mirrors the reference's Glue-catalog registration
-    (``athena_source.py:196-204``) — a table name resolvable in SQL —
-    without any service round-trip.
-    """
-    names = tables or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = read_table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out
