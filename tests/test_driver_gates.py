@@ -81,8 +81,8 @@ ALLOWED: dict[tuple[str, str], str] = {
         "O(model features) per-column stats rows for statistics.json — the "
         "baseline artifact is catalog-sized, never data-sized",
     ("api/monitor.py", "run_monitoring_execution"):
-        "O(monitored features) drift-stat rows — one fused melted pass per "
-        "statistic (psi_by_feature/ks_by_feature), never per-feature jobs",
+        "O(monitored features) drift-stat rows — one fused melted histogram "
+        "pass for PSI and KS together (drift_by_feature), never per-feature jobs",
     ("api/cached_meta.py", "_update_modified_registry"):
         "catalog-sized listing (rows = registered artifacts, never data "
         "rows) collected to merge per-artifact modified stamps",

@@ -289,6 +289,24 @@ def test_seeded_pipeline_metrics_equal_reloaded(
     assert Endpoint(m).inference(val, capture=False).metrics == reloaded.metrics
 
 
+@pytest.mark.parametrize(
+    "model_type,target", [("regressor", "y"), ("classifier", "band")]
+)
+def test_train_without_validation_rows_stores_no_metrics(
+    spark, warehouse, model_type, target
+):
+    """A validation role column that holds out no rows leaves the model
+    without metrics (the validation inference saw no rows)."""
+    from workbench_spark.api.model import Model
+
+    m = Model.train(
+        _toy_frame(spark).withColumn("validation", F.lit(False)),
+        f"noval_{model_type}", target=target, features=["x", "z"],
+        model_type=model_type, algo="rf", spark=spark, warehouse=warehouse,
+    )
+    assert m.metrics() is None
+
+
 def _uq_cal_frame(spark):
     """Deterministic regression calibration frame: target = acctbal,
     prediction = acctbal + seeded hash noise in [-10, 10]."""

@@ -242,6 +242,142 @@ def test_fused_drift_matches_per_feature(spark):
         assert abs(fused_ks[c] - single_ks) < 1e-12, c
 
 
+def test_drift_by_feature_ks_bucket_spanning_psi_buckets(spark):
+    """With bounds (0, 1), 0.3 lands in PSI bucket 2 but KS bucket 300,
+    the KS bucket of 0.3005 (PSI bucket 3). Both rows of KS bucket 300
+    must share one running sum (RANGE frame): the two sides' CDFs agree
+    everywhere, so KS is 0.0 as ks_by_feature gives (a ROWS frame reads
+    0.5 between the tied rows)."""
+    from workbench_spark.operators.drift import (
+        drift_by_feature,
+        ks_by_feature,
+        psi_by_feature,
+    )
+
+    shared = spark.range(50).select((F.col("id") / 100).alias("x"))
+    ref = shared.unionByName(spark.range(50).select(F.lit(0.3005).alias("x")))
+    cur = shared.unionByName(spark.range(50).select(F.lit(0.3).alias("x")))
+    bounds = {"x": (0.0, 1.0)}
+    row = drift_by_feature(ref, cur, bounds, 10, 1000).first()
+    assert row["ks"] == 0.0 == ks_by_feature(ref, cur, bounds, 1000).first()["ks"]
+    assert row["psi"] == psi_by_feature(ref, cur, bounds, 10).first()["psi"] > 1
+
+
+def test_drift_by_feature_one_sided_null_feature(spark):
+    """A feature with no non-null values on one side has no PSI (psi_by_feature
+    omits it, drift_by_feature reports NULL — an eps-floored fold would
+    read ~13.8) and a NULL KS; the other features are unaffected."""
+    from workbench_spark.operators.drift import (
+        drift_by_feature,
+        ks_by_feature,
+        ks_statistic_binned,
+        psi,
+        psi_by_feature,
+    )
+
+    ref = spark.range(100).select(
+        (F.col("id") % 10).cast("double").alias("a"),
+        F.lit(None).cast("double").alias("b"),
+    )
+    cur = spark.range(80).select(
+        ((F.col("id") % 10) * 1.1).alias("a"), F.lit(3.0).alias("b")
+    )
+    bounds = {"a": (0.0, 11.0), "b": (0.0, 7.0)}
+    fused = {r["feature"]: (r["psi"], r["ks"]) for r in drift_by_feature(ref, cur, bounds).collect()}
+    assert fused["b"] == (None, None)
+    assert [r["feature"] for r in psi_by_feature(ref, cur, bounds).collect()] == ["a"]
+    assert {r["feature"]: r["ks"] for r in ks_by_feature(ref, cur, bounds).collect()}["b"] is None
+    assert fused["a"] == (
+        psi(ref, cur, "a", 0.0, 11.0).first()["psi"],
+        ks_statistic_binned(ref, cur, "a", 0.0, 11.0).first()["ks"],
+    )
+
+
+def test_drift_by_feature_starts_no_python_worker(spark):
+    """The drift pass is pure JVM: no Python-built bucket grid (an
+    ExistingRDD scan, which starts Python workers) in the executed plan."""
+    from workbench_spark.operators.drift import drift_by_feature, psi_by_feature
+
+    ref = spark.range(100).select((F.col("id") % 10).cast("double").alias("a"))
+    cur = spark.range(80).select((F.col("id") % 7).cast("double").alias("a"))
+    for out in (
+        drift_by_feature(ref, cur, {"a": (0.0, 10.0)}),
+        psi_by_feature(ref, cur, {"a": (0.0, 10.0)}),
+    ):
+        assert "ExistingRDD" not in out._jdf.queryExecution().executedPlan().toString()
+
+
+# Job ceilings of the monitor's bookkeeping passes on the fixture below.
+BASELINE_JOBS = 7
+EXECUTION_JOBS = 7
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs run by fn(), counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobpin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_monitor_job_counts(spark, warehouse, endpoint):
+    """Job floor of the baseline and execution passes. The row counts ride
+    in the aggregates the passes already run, and PSI + KS share one
+    histogram pass. Before that, create_baseline ran 9 jobs and
+    run_monitoring_execution 22 (16 of them the separate PSI and KS
+    plans) on this fixture."""
+    import os
+    import shutil
+
+    ep, df = endpoint
+    mon = ep.monitor()
+    assert _jobs(spark, lambda: mon.create_baseline(baseline_df=df, recreate=True)) <= BASELINE_JOBS
+    if os.path.isdir(mon.capture_dir):
+        shutil.rmtree(mon.capture_dir)
+    ep.inference(df.drop("validation").limit(200), capture=True)
+    rec = {}
+    assert _jobs(spark, lambda: rec.update(mon.run_monitoring_execution())) <= EXECUTION_JOBS
+    assert rec["captured_rows"] == 200 and rec["status"] == "Completed"
+    shutil.rmtree(mon.capture_dir)
+
+
+def test_execution_record_with_all_null_captured_feature(spark, warehouse, endpoint):
+    """A captured feature that is all NULL fails its completeness check
+    and gets no PSI/KS verdict (neither side's histogram can be compared),
+    so it raises no psi_drift_check / ks_drift_check violation."""
+    import json
+    import os
+    import shutil
+
+    ep, df = endpoint
+    mon = ep.monitor()
+    mon.create_baseline(baseline_df=df, recreate=True)
+    cap_dir = mon.capture_dir
+    if os.path.isdir(cap_dir):
+        shutil.rmtree(cap_dir)
+    os.makedirs(cap_dir)
+    rows = df.select("total_qty", "avg_price").limit(50).collect()
+    with open(os.path.join(cap_dir, "capture.json"), "w") as f:
+        for r in rows:
+            f.write(json.dumps({**r.asDict(), "n_lines": None}) + "\n")
+    rec = mon.run_monitoring_execution()
+    on_n_lines = {
+        v["constraint_check_type"] for v in rec["violations"] if v["feature"] == "n_lines"
+    }
+    assert on_n_lines == {"completeness_check"}
+    stats = {s["feature"]: s for s in rec["feature_stats"]}
+    assert stats["n_lines"]["completeness"] == 0.0
+    assert stats["n_lines"]["psi"] is None and stats["n_lines"]["ks"] is None
+    assert stats["total_qty"]["psi"] is not None
+    shutil.rmtree(cap_dir)
+
+
 def test_streaming_drift_monitor(spark, warehouse):
     """Monitor.streaming_drift_monitor wires the stored baseline +
     constraints bounds into the watermarked streaming PSI — per-window

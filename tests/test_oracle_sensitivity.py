@@ -149,8 +149,12 @@ def test_mut_tiebreak_swap(pair):
     sdf, pdf = pair
     m = pdf.copy()
     c = _int_col(m)
-    assert m.loc[0, c] != m.loc[1, c], "need distinct values to swap"
-    m.loc[0, c], m.loc[1, c] = m.loc[1, c], m.loc[0, c]
+    # the oracle has no ORDER BY and two q1 groups share a count, so take
+    # the first row whose value differs from row 0's, not row 1
+    others = [i for i in range(1, len(m)) if m.loc[i, c] != m.loc[0, c]]
+    assert others, "need distinct values to swap"
+    j = others[0]
+    m.loc[0, c], m.loc[j, c] = m.loc[j, c], m.loc[0, c]
     _expect(sdf, m, "values differ")
 
 

@@ -280,6 +280,17 @@ def test_driver_matrix_gate_sees_past_null_first_row(spark):
     assert driver_matrix_check(vecs, "embedding", max_bytes=100) == (False, 2560, 100)
 
 
+def test_pq_train_skips_null_vectors(spark):
+    """NULL vectors never reach the numpy training sample (a ragged
+    np.array raised ValueError): codebooks trained on a frame whose first
+    vector is NULL equal those trained on the frame without that row."""
+    from workbench_spark.operators.similarity import pq_train
+
+    vecs = _null_first_vectors(spark)
+    books = pq_train(vecs, m=2, k=4, dim=8)
+    assert books == pq_train(vecs.filter(F.col("vec_id") > 0), m=2, k=4, dim=8)
+
+
 def test_quantize_roundtrip_error_bound(spark):
     """int8 quantization invariants: codes in [-127, 127], per-component
     reconstruction error <= scale/2 + ulp, zero vectors stay zero, and

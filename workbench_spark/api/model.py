@@ -134,9 +134,12 @@ class Model:
             meta["class_labels"] = list(labels)
         self.registry.write_meta(self.name, meta)
 
-        if val_df is not None and val_df.count() > 0:
-            result = Endpoint(self).inference(val_df, capture=False)
-            self.registry.upsert_meta(self.name, {"metrics": result.metrics})
+        if val_df is not None:
+            # metrics only when the held-out rows reached the model (no
+            # separate count job: the metrics aggregate already counts them)
+            m = Endpoint(self).inference(val_df, capture=False).metrics
+            if m.get("support") or m.get("confusion_matrix"):
+                self.registry.upsert_meta(self.name, {"metrics": m})
         return self
 
     # ------------------------------------------------------------ access

@@ -221,17 +221,15 @@ class Monitor:
         from workbench_spark.operators.eda import descriptive_stats, numeric_columns
 
         num_cols = numeric_columns(base)
-        n_rows = base.count()
         stats_rows = {
             r["column_name"]: r.asDict()
             for r in descriptive_stats(base, num_cols).collect()
         }
         nulls = base.select(
-            [
-                F.sum(F.col(c).isNull().cast("long")).alias(c)
-                for c in features
-            ]
+            F.count(F.lit(1)),
+            *[F.sum(F.col(c).isNull().cast("long")).alias(c) for c in features],
         ).first()
+        n_rows = nulls[0]
         statistics = []
         constraints = {"features": {}, "monitoring_config": {}}
         for c in features:
@@ -400,7 +398,26 @@ class Monitor:
             record.update(status="Failed", failure_reason="Job inputs had no data")
             return self._append_execution(record)
         captured = self.spark.read.json(files)
-        n = captured.count()
+        feats_all = constraints.get("features", {})
+        feats = {
+            c: spec for c, spec in feats_all.items() if c in captured.columns
+        }
+        # one aggregation pass for row count + completeness + bounds across
+        # all features
+        aggs = [F.count(F.lit(1))]
+        for c, spec in feats.items():
+            aggs.append(F.sum(F.col(c).isNotNull().cast("long")).alias(f"__nn_{c}"))
+            if "lower_bound" in spec:
+                aggs.append(
+                    F.sum(
+                        (
+                            (F.col(c) < F.lit(spec["lower_bound"]))
+                            | (F.col(c) > F.lit(spec["upper_bound"]))
+                        ).cast("long")
+                    ).alias(f"__oob_{c}")
+                )
+        row = captured.agg(*aggs).first()
+        n = row[0]
         if n == 0:
             record.update(status="Failed", failure_reason="Job inputs had no data")
             return self._append_execution(record)
@@ -408,11 +425,10 @@ class Monitor:
         record["capture_files"] = len(files)
         record["capture_watermark_ns"] = new_wm
 
-        from workbench_spark.operators.drift import ks_by_feature, psi_by_feature
+        from workbench_spark.operators.drift import drift_by_feature
 
-        # schema drift first (SageMaker Model Monitor's missing_column /
+        # schema drift (SageMaker Model Monitor's missing_column /
         # extra_column checks): baseline features absent from the capture
-        feats_all = constraints.get("features", {})
         for c in sorted(set(feats_all) - set(captured.columns)):
             record["violations"].append(
                 {
@@ -445,28 +461,11 @@ class Monitor:
                     "description": "captured column absent from baseline",
                 }
             )
-        feats = {
-            c: spec for c, spec in feats_all.items() if c in captured.columns
-        }
-        # one aggregation pass for completeness + bounds across all features
-        aggs = []
-        for c, spec in feats.items():
-            aggs.append(F.sum(F.col(c).isNotNull().cast("long")).alias(f"__nn_{c}"))
-            if "lower_bound" in spec:
-                aggs.append(
-                    F.sum(
-                        (
-                            (F.col(c) < F.lit(spec["lower_bound"]))
-                            | (F.col(c) > F.lit(spec["upper_bound"]))
-                        ).cast("long")
-                    ).alias(f"__oob_{c}")
-                )
-        row = captured.agg(*aggs).first() if aggs else None
         baseline = self.get_baseline()
-        # drift stats for ALL bounded features in one fused pass each
-        # (psi_by_feature / ks_by_feature melt the feature columns — two
-        # Spark jobs total, never two per feature; a 500-feature monitor
-        # must not issue 1000 jobs)
+        # PSI and KS for ALL bounded features in one fused histogram pass
+        # (drift_by_feature melts the feature columns — a fixed number of
+        # Spark jobs, never two per feature; a 500-feature monitor must not
+        # issue 1000 jobs)
         bounds = {
             c: (float(spec["lower_bound"]), float(spec["upper_bound"]))
             for c, spec in feats.items()
@@ -475,14 +474,9 @@ class Monitor:
         }
         psi_map, ks_map = {}, {}
         if baseline is not None and bounds:
-            psi_map = {
-                r["feature"]: r["psi"]
-                for r in psi_by_feature(baseline, captured, bounds, bins).collect()
-            }
-            ks_map = {
-                r["feature"]: r["ks"]
-                for r in ks_by_feature(baseline, captured, bounds, 1000).collect()
-            }
+            for r in drift_by_feature(baseline, captured, bounds, bins, 1000).collect():
+                psi_map[r["feature"]] = r["psi"]
+                ks_map[r["feature"]] = r["ks"]
         record["feature_stats"] = []
         for c, spec in sorted(feats.items()):
             completeness = (row[f"__nn_{c}"] or 0) / n

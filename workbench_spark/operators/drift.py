@@ -11,8 +11,22 @@ groupBy (O(bins) state); KS is a full-outer join of the two binned CDFs
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _bucket(column: str, lo: float, hi: float, bins: int) -> Column:
+    """Bucket of ``column`` among ``bins`` equal buckets over [lo, hi);
+    values at or beyond the edges clamp into the end buckets."""
+    # zero-width range (constant column / degenerate caller bounds): clamp
+    # to 1 so every value lands in bucket 0 instead of dividing by zero
+    # (NULL buckets under ANSI-off would full-join as DISTINCT null rows
+    # and fabricate drift between identical frames)
+    width = ((hi - lo) / bins) or 1.0
+    return F.least(
+        F.lit(bins - 1),
+        F.greatest(F.lit(0), F.floor((F.col(column) - lo) / width)),
+    ).cast("int")
 
 
 def binned_distribution(
@@ -21,18 +35,9 @@ def binned_distribution(
     """Histogram over fixed [lo, hi) with ``bins`` equal buckets; values at
     or beyond the edges clamp into the end buckets (distribution_stats.py
     bins on the union range). Output: (bucket int, count, frac)."""
-    # zero-width range (constant column / degenerate caller bounds): clamp
-    # to 1 so every value lands in bucket 0 instead of dividing by zero
-    # (NULL buckets under ANSI-off would full-join as DISTINCT null rows
-    # and fabricate drift between identical frames)
-    width = ((hi - lo) / bins) or 1.0
-    bucket = F.least(
-        F.lit(bins - 1),
-        F.greatest(F.lit(0), F.floor((F.col(column) - lo) / width)),
-    ).cast("int")
     counted = (
         df.filter(F.col(column).isNotNull())
-        .groupBy(bucket.alias("bucket"))
+        .groupBy(_bucket(column, lo, hi, bins).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("count"))
     )
     total = counted.agg(F.sum("count").alias("__t"))
@@ -177,33 +182,83 @@ def ks_statistic_binned(
     )
 
 
-def _melted(df: DataFrame, bounds: dict[str, tuple[float, float]], bins: int) -> DataFrame:
-    """(feature, bucket, count) for ALL features in one pass: stack the
-    feature columns into long form map-side (an Expand node — no shuffle),
-    bucket each value against its feature's [lo, hi), then ONE
-    map-side-combinable groupBy. The per-feature-job loop this replaces
-    issued 2 Spark jobs per monitored feature."""
-    cols = []
-    for c, (lo, hi) in bounds.items():
-        width = (hi - lo) / bins or 1.0
-        cols.append(
+def drift_by_feature(
+    ref: DataFrame,
+    cur: DataFrame,
+    bounds: dict[str, tuple[float, float]],
+    psi_bins: int = 10,
+    ks_bins: int = 1000,
+    eps: float = 1e-6,
+) -> DataFrame:
+    """PSI and binned KS for MANY features in ONE histogram pass (the
+    Monitor job shape — monitoring hundreds of features must not issue
+    hundreds of jobs). Output: (feature, psi, ks), one row per feature
+    with a non-null value on either side; psi is NULL when either side
+    has none. Same math as psi() / ks_statistic_binned() per feature.
+
+    Both sides are tagged, melted into long form map-side (a Generate, no
+    shuffle; each value gets its PSI and its KS bucket, each computed from
+    the value) and counted by ONE (feature, ks_bucket, psi_bucket)
+    groupBy. The rest is windows partitioned by feature (never a global
+    order) and one groupBy(feature)."""
+
+    def melt(df: DataFrame, is_ref: bool) -> DataFrame:
+        cols = [
             F.struct(
                 F.lit(c).alias("feature"),
-                F.when(
-                    F.col(c).isNotNull(),
-                    F.least(
-                        F.lit(bins - 1),
-                        F.greatest(F.lit(0), F.floor((F.col(c) - lo) / width)),
-                    ).cast("int"),
-                ).alias("bucket"),
+                F.when(F.col(c).isNotNull(), _bucket(c, lo, hi, ks_bins)).alias("kb"),
+                _bucket(c, lo, hi, psi_bins).alias("pb"),
             )
+            for c, (lo, hi) in bounds.items()
+        ]
+        return df.select(
+            F.lit(is_ref).alias("is_ref"), F.explode(F.array(*cols)).alias("m")
+        ).select("is_ref", "m.*")
+
+    hist = (
+        melt(ref, True)
+        .unionByName(melt(cur, False))
+        .filter(F.col("kb").isNotNull())
+        .groupBy("feature", "kb", "pb")
+        .agg(
+            F.count(F.when(F.col("is_ref"), 1)).alias("pc"),
+            F.count(F.when(~F.col("is_ref"), 1)).alias("qc"),
         )
-    return (
-        df.select(F.explode(F.array(*cols)).alias("m"))
-        .select("m.feature", "m.bucket")
-        .filter(F.col("bucket").isNotNull())
-        .groupBy("feature", "bucket")
-        .agg(F.count(F.lit(1)).alias("count"))
+    )
+    # RANGE frame: one KS bucket can span two PSI buckets (float floors of
+    # (x−lo)/width at two widths), and its rows must share one running sum
+    by_kb = Window.partitionBy("feature").orderBy("kb")
+    whole = by_kb.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    by_pb = Window.partitionBy("feature", "pb")
+    p = F.greatest(F.coalesce(F.sum("pc").over(by_pb) / F.col("tp"), F.lit(0.0)), F.lit(eps))
+    q = F.greatest(F.coalesce(F.sum("qc").over(by_pb) / F.col("tq"), F.lit(0.0)), F.lit(eps))
+    # Cross-row float sum → quantize each per-bucket term to integer
+    # pico-units and SUM the integers (commutative in any partitioning,
+    # bit-identical in DuckDB — the micro-nat pattern). Terms are ≥ 0
+    # ((p−q) and ln(p/q) share sign), bounded by ln(1/eps) ≈ 13.8, so
+    # term·1e12 < 2^53 and the BIGINT sum can't overflow at any bins.
+    # Each PSI bucket's term is counted on its lowest-KS-bucket row only;
+    # buckets empty on both sides would add (eps−eps)·ln 1 = 0.
+    term = F.floor((p - q) * F.log(p / q) * F.lit(1e12) + F.lit(0.5)).cast("long")
+    rows = (
+        hist.withColumn("tp", F.sum("pc").over(whole))
+        .withColumn("tq", F.sum("qc").over(whole))
+        .select(
+            "feature",
+            F.when(F.col("kb") == F.min("kb").over(by_pb), term).alias("term"),
+            F.abs(
+                F.sum("pc").over(by_kb) / F.col("tp") - F.sum("qc").over(by_kb) / F.col("tq")
+            ).alias("gap"),
+            "tp",
+            "tq",
+        )
+    )
+    return rows.groupBy("feature").agg(
+        F.when(
+            (F.max("tp") > 0) & (F.max("tq") > 0),
+            F.sum("term").cast("double") / F.lit(1e12),
+        ).alias("psi"),
+        F.max("gap").alias("ks"),
     )
 
 
@@ -214,52 +269,11 @@ def psi_by_feature(
     bins: int = 10,
     eps: float = 1e-6,
 ) -> DataFrame:
-    """PSI for MANY features in one fused pass (the Monitor job shape —
-    monitoring hundreds of features must not issue hundreds of jobs):
-    melt → two (feature, bucket) histograms → join on (feature, bucket)
-    against the full per-feature bucket grid → one groupBy(feature).
-    Output: (feature, psi). Identical math to psi() per feature (zero
-    bins floored at eps)."""
-    p = _melted(ref, bounds, bins)
-    q = _melted(cur, bounds, bins)
-    pt = p.groupBy("feature").agg(F.sum("count").alias("__tp"))
-    qt = q.groupBy("feature").agg(F.sum("count").alias("__tq"))
-    spark = ref.sparkSession
-    grid = spark.createDataFrame(
-        [(c, b) for c in bounds for b in range(bins)], "feature string, bucket int"
-    )
-    j = (
-        grid.join(p, ["feature", "bucket"], "left")
-        .withColumnRenamed("count", "pc")
-        .join(q, ["feature", "bucket"], "left")
-        .withColumnRenamed("count", "qc")
-        .join(F.broadcast(pt), "feature")
-        .join(F.broadcast(qt), "feature")
-        .select(
-            "feature",
-            F.greatest(
-                F.coalesce(F.col("pc") / F.col("__tp"), F.lit(0.0)), F.lit(eps)
-            ).alias("p"),
-            F.greatest(
-                F.coalesce(F.col("qc") / F.col("__tq"), F.lit(0.0)), F.lit(eps)
-            ).alias("q"),
-        )
-    )
-    # Cross-row float sum → quantize each per-bucket term to integer
-    # pico-units and SUM the integers (commutative in any partitioning,
-    # bit-identical in DuckDB — the micro-nat pattern). Terms are ≥ 0
-    # ((p−q) and ln(p/q) share sign), bounded by ln(1/eps) ≈ 13.8, so
-    # term·1e12 < 2^53 and the BIGINT sum can't overflow at any bins.
-    term = (F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))
-    withterm = j.select("feature", term.alias("__term"))
-    return withterm.groupBy("feature").agg(
-        (
-            F.sum(F.floor(F.col("__term") * F.lit(1e12) + F.lit(0.5)).cast("long")).cast(
-                "double"
-            )
-            / F.lit(1e12)
-        ).alias("psi")
-    )
+    """PSI for MANY features in one fused pass (drift_by_feature).
+    Output: (feature, psi) for the features with non-null values on both
+    sides. Identical math to psi() per feature (zero bins floored at eps)."""
+    out = drift_by_feature(ref, cur, bounds, bins, bins, eps)
+    return out.filter(F.col("psi").isNotNull()).select("feature", "psi")
 
 
 def ks_by_feature(
@@ -268,33 +282,7 @@ def ks_by_feature(
     bounds: dict[str, tuple[float, float]],
     bins: int = 1000,
 ) -> DataFrame:
-    """Binned KS for MANY features in one fused pass: melted histograms,
-    per-feature running CDFs (window PARTITIONED by feature — never a
-    global order), max gap per feature. Output: (feature, ks). Same math
-    as ks_statistic_binned per feature."""
-    p = _melted(ref, bounds, bins).withColumnRenamed("count", "pc")
-    q = _melted(cur, bounds, bins).withColumnRenamed("count", "qc")
-    j = p.join(q, ["feature", "bucket"], "full").select(
-        "feature",
-        "bucket",
-        F.coalesce("pc", F.lit(0)).alias("pc"),
-        F.coalesce("qc", F.lit(0)).alias("qc"),
-    )
-    w = Window.partitionBy("feature").orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    totals = j.groupBy("feature").agg(
-        F.sum("pc").alias("tp"), F.sum("qc").alias("tq")
-    )
-    cdf = j.withColumn("cp", F.sum("pc").over(w)).withColumn(
-        "cq", F.sum("qc").over(w)
-    )
-    return (
-        cdf.join(F.broadcast(totals), "feature")
-        .groupBy("feature")
-        .agg(
-            F.max(
-                F.abs(F.col("cp") / F.col("tp") - F.col("cq") / F.col("tq"))
-            ).alias("ks")
-        )
-    )
+    """Binned KS for MANY features in one fused pass (drift_by_feature).
+    Output: (feature, ks), NULL when one side has no non-null values.
+    Same math as ks_statistic_binned per feature."""
+    return drift_by_feature(ref, cur, bounds, bins, bins).select("feature", "ks")

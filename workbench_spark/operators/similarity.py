@@ -1026,9 +1026,9 @@ def pq_train(
     vector into ``m`` contiguous subspaces and k-means each one to ``k``
     centroids. Returns codebooks[m][k][dim/m].
 
-    The training sample is a DETERMINISTIC prefix (orderBy id, limit) —
-    PQ codebooks only need the distribution, and determinism beats
-    sampling finesse for replayability. The pull is gated by
+    The training sample is a DETERMINISTIC prefix of the non-NULL vectors
+    (orderBy id, limit) — PQ codebooks only need the distribution, and
+    determinism beats sampling finesse for replayability. The pull is gated by
     driver_matrix_check (FAISS trains PQ on a driver-side sample the
     same way); Lloyd runs seeded numpy on sample_n×(dim/m) blocks."""
     import numpy as np
@@ -1037,7 +1037,12 @@ def pq_train(
         dim = _vector_dim(vectors, vec_col)
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    sample = vectors.orderBy(F.col(id_col)).limit(sample_n).select(vec_col)
+    sample = (
+        vectors.filter(F.col(vec_col).isNotNull())
+        .orderBy(F.col(id_col))
+        .limit(sample_n)
+        .select(vec_col)
+    )
     fits, est, lim = driver_matrix_check(sample, vec_col, dim=dim)
     if not fits:
         raise ValueError(

@@ -6867,14 +6867,15 @@ def _drift_psi_oracle_sql(bins: int = 10) -> str:
 
 @query("drift_psi_by_feature", _drift_psi_oracle_sql())
 def drift_psi_by_feature_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fused multi-feature PSI (drift.psi_by_feature — the melted one-pass
-    shape Monitor.run_monitoring_execution uses so a 500-feature monitor
-    issues 2 drift jobs, not 1000): even- vs odd-orderkey lineitem halves
-    over three features with fixed bounds. The oracle recomputes every
-    feature's binned PSI independently — the hash match certifies the
-    melt, the per-feature bucket grid, and the eps-floored folds. (The
-    full-grid join adds only missing-in-both buckets, which contribute
-    (eps−eps)·ln(1) = 0 — identical sums.)"""
+    """Fused multi-feature PSI (drift.psi_by_feature, a select over
+    drift_by_feature — the one histogram pass Monitor.run_monitoring_execution
+    uses for PSI and KS together, so a 500-feature monitor issues 3 drift
+    jobs, not 1000): even- vs odd-orderkey lineitem halves over three
+    features with fixed bounds. The oracle recomputes every feature's
+    binned PSI over the full bucket grid independently — the hash match
+    certifies the melt, the per-PSI-bucket totals and the eps-floored
+    folds. (Buckets missing on both sides, absent from the fused
+    histogram, contribute (eps−eps)·ln(1) = 0 — identical sums.)"""
     from workbench_spark.operators.drift import psi_by_feature
 
     li = _t(spark, sf_dir, "lineitem")

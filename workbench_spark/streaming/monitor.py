@@ -611,7 +611,7 @@ def stream_constraint_monitor(
     ``bounds``: {feature: (lo, hi) | None} — None checks completeness
     only. Shape: the feature columns are melted map-side into
     (feature, is_null, is_oob) structs (one Expand, no extra shuffle —
-    the psi_by_feature pattern), then ONE watermarked windowed
+    the drift_by_feature pattern), then ONE watermarked windowed
     groupBy(window, feature). Output rows: (window_start, window_end,
     feature, n, n_null, n_oob). State is O(windows × features); a
     500-feature monitor is one streaming aggregation, not 500 queries."""
