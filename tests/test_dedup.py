@@ -758,3 +758,14 @@ def test_semdedup_auto_clusters(spark):
                  exact=True, dim=64)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     assert a.count() == n
+
+
+def test_semdedup_invariants_leaves_no_cache(spark):
+    """The invariants entry caches its verdict frame and its pair frame
+    while it computes three booleans on the driver; it must unpersist
+    both before returning its driver-built 1-row result."""
+    from workbench_spark.queries import queries
+
+    spark.catalog.clearCache()
+    queries()["dedup_semdedup_invariants"](spark, SF_DIR).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -247,3 +247,87 @@ def test_graph_ops_degenerate_inputs(spark):
     # self-loop-only graph: well-defined, mass conserved
     solo = pagerank(spark.createDataFrame([(7, 7)], "src long, dst long"), iters=3)
     assert {r["node"]: r["rank_scaled"] for r in solo.collect()} == {7: 10**12}
+
+
+# ---------------------------------------------------------------------------
+# Checkpoint release and job counts
+# ---------------------------------------------------------------------------
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _rdds_read(df) -> set:
+    """Ids of the checkpointed RDDs ``df``'s logical plan scans."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    return {
+        leaf.rdd().id()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
+def _assert_released(spark, build, calls=3):
+    """``build()`` ``calls`` times with every result kept alive: the only
+    RDDs left registered are the checkpoints those results read."""
+    before = _persisted(spark)
+    results = [build() for _ in range(calls)]
+    read = set().union(*(_rdds_read(df) for df in results))
+    leaked = _persisted(spark) - before - read
+    assert not leaked, f"{len(leaked)} checkpoints outlive their operator call"
+    return results
+
+
+def test_k_hop_releases_its_checkpoints(spark):
+    from workbench_spark.operators.graph import k_hop_neighborhood
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(12)], "src long, dst long")
+    (out,) = _assert_released(spark, lambda: k_hop_neighborhood(path, [0], hops=10), 1)
+    assert {r["node"]: r["hop"] for r in out.collect()} == {i: i for i in range(11)}
+
+
+# Spark jobs per graph registry entry at sf0.001 under this module's
+# session — the builder plus one full read of the result (the
+# [rows, sum xxhash64(struct)] aggregate) — as measured before the loops
+# moved onto graph._iterate; the shared loop must add none
+_ENTRY_JOBS = {
+    "graph_pagerank_authority": 71,
+    "graph_hits_hubs_authorities": 71,
+    "dedup_cc_membership": 47,
+    "dedup_leakage_safe_split": 50,
+    "dedup_cluster_representatives": 53,
+    "dedup_star_invariants": 118,
+}
+_RELEASE_CHECKED = {
+    "graph_pagerank_authority",
+    "graph_hits_hubs_authorities",
+    "dedup_cc_membership",
+    "dedup_leakage_safe_split",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ENTRY_JOBS))
+def test_graph_entry_jobs_and_released_checkpoints(spark, name):
+    from workbench_spark.queries import queries
+
+    build = queries()[name]
+    sc = spark.sparkContext
+
+    def run():
+        df = build(spark, SF_DIR)
+        df.agg(F.count(F.lit(1)), F.sum(F.xxhash64(F.struct(*df.columns)))).collect()
+        return df
+
+    if name in _RELEASE_CHECKED:
+        _assert_released(spark, run)
+    else:
+        run()  # warm-up, as the job pins were measured
+    group = f"test_graph:{name}"
+    sc.setJobGroup(group, name)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= _ENTRY_JOBS[name], f"{name}: {jobs} jobs > {_ENTRY_JOBS[name]}"

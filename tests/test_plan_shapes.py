@@ -331,6 +331,84 @@ def test_forced_broadcast_tripwire_catches_chained_hint():
     ]
 
 
+# Calls that run a Spark job or cut lineage. In operators/graph.py only
+# graph._iterate may make them inside a loop: a hand-rolled loop that
+# probes before it checkpoints executes each round twice, and one that
+# checkpoints without releasing leaves every round registered.
+_LOOP_ONLY_IN_ITERATE = {"localCheckpoint", "checkpoint", "isEmpty", "collect"}
+
+
+def loop_probe_violations(src: str, module: str) -> list[str]:
+    """Every checkpoint or probe call inside a for/while body of ``src``
+    that is not in ``_iterate``."""
+    import ast
+
+    violations = []
+    for fndef in ast.walk(ast.parse(src)):
+        if not isinstance(fndef, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        if fndef.name == "_iterate":
+            continue
+        for loop in ast.walk(fndef):
+            if not isinstance(loop, (ast.For, ast.AsyncFor, ast.While)):
+                continue
+            for stmt in loop.body + loop.orelse:
+                for node in ast.walk(stmt):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in _LOOP_ONLY_IN_ITERATE
+                    ):
+                        violations.append(
+                            f"{module}.{fndef.name}: {node.func.attr} in a loop body"
+                        )
+    return sorted(set(violations))
+
+
+def test_graph_loops_go_through_iterate():
+    """Source-level tripwire: every fixpoint loop in operators/graph.py
+    runs through graph._iterate, which checkpoints before it probes and
+    releases the rounds it made."""
+    import pathlib
+
+    import workbench_spark.operators.graph as graph
+
+    src = pathlib.Path(graph.__file__).read_text()
+    assert "def _iterate(" in src
+    assert loop_probe_violations(src, "graph") == []
+
+
+# the label-propagation loop as connected_components hand-rolled it
+# before graph._iterate existed
+_OLD_CC_LABEL_LOOP = """
+def connected_components(edges, ej, labels, max_iter=20):
+    for _ in range(max_iter):
+        updated = (
+            ej.join(labels.withColumnRenamed("node", "d"), "d")
+            .groupBy(F.col("s").alias("node"))
+            .agg(F.min("component").alias("component"))
+        )
+        new_labels = updated.localCheckpoint(eager=True)
+        has_change = not new_labels.filter(F.col("__chg")).limit(1).isEmpty()
+        labels = new_labels.drop("__chg")
+        if not has_change:
+            break
+    return labels
+"""
+
+
+def test_loop_probe_tripwire_catches_hand_rolled_loop():
+    """Seeded mutation: the old hand-rolled CC loop trips the tripwire on
+    both its checkpoint and its probe; the same calls inside a function
+    named _iterate do not."""
+    assert loop_probe_violations(_OLD_CC_LABEL_LOOP, "graph") == [
+        "graph.connected_components: isEmpty in a loop body",
+        "graph.connected_components: localCheckpoint in a loop body",
+    ]
+    exempt = _OLD_CC_LABEL_LOOP.replace("def connected_components(", "def _iterate(")
+    assert loop_probe_violations(exempt, "graph") == []
+
+
 def _killer_params():
     """r16 suite-time cut (r15 VERDICT #2): building the PLAN of the
     iterative / index-building entries executes their driver loops

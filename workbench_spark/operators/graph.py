@@ -15,6 +15,8 @@ diameter, convergence detected via a cheap change-count.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -22,6 +24,53 @@ from pyspark.sql import functions as F
 def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
     fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     return fwd.unionAll(fwd.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
+
+
+def _release(result: DataFrame, *frames: DataFrame) -> DataFrame:
+    """Unpersist the checkpoint under each of ``frames`` that ``result``
+    does not read; return ``result``. Unreleased, a checkpoint lives until
+    Python GC happens to let Spark's ContextCleaner reclaim it."""
+
+    def rdd(plan):  # a checkpoint's plan is a LogicalRDD over its RDD
+        return plan.rdd() if plan.getClass().getSimpleName() == "LogicalRDD" else None
+
+    leaves = result._jdf.queryExecution().logical().collectLeaves()
+    read = {rdd(leaves.apply(i)) for i in range(leaves.size())}
+    read = {r.id() for r in read if r is not None}
+    for df in frames:
+        r = rdd(df._jdf.queryExecution().logical())
+        if r is not None and r.id() not in read:
+            r.unpersist(False)
+    return result
+
+
+def _iterate(
+    state: DataFrame, step: Callable, max_iter: int, converged: Callable | None = None
+) -> DataFrame:
+    """The fixpoint loop of every iterative operator here: ``state =
+    step(state, i)`` for i < max_iter, each round localCheckpoint'ed so
+    lineage stays one round deep; returns the last round.
+
+    With a ``converged(state, i)`` probe, rounds are checkpointed eagerly
+    FIRST and probed materialized (probing the raw plan runs the round
+    twice); True stops the loop. Without one, rounds are checkpointed
+    lazily (no eager job per round) and the last one eagerly. A round is
+    released once a later one is materialized, not before: under AQE a
+    lazy checkpoint runs its shuffle stages but never becomes
+    isCheckpointed(), so later rounds may recompute through it. The
+    initial state is the caller's and is never released."""
+    earlier: list[DataFrame] = []
+    for i in range(max_iter):
+        eager = converged is not None or i == max_iter - 1
+        state = step(state, i).localCheckpoint(eager=eager)
+        stop = converged is not None and converged(state, i)
+        if eager:  # state is marked checkpointed: no earlier round is read
+            _release(state, *earlier)
+            earlier = []
+        earlier.append(state)
+        if stop:
+            break
+    return state
 
 
 def k_hop_neighborhood(
@@ -33,35 +82,33 @@ def k_hop_neighborhood(
 ) -> DataFrame:
     """M6 — node ids within ``hops`` undirected hops of the start set.
     Output: (node, hop) with the minimal hop distance (start nodes = 0).
-    Each hop is one broadcast-able join of the (small) frontier against
-    the edge list."""
-    spark = edges.sparkSession
+    Each hop is one broadcast-able join of the (small) frontier — the
+    visited rows at hop h-1 — against the edge list."""
     # materialize the symmetric edge list ONCE: it sits inside every
     # hop's join, and its distinct carries a shuffle — without the
-    # checkpoint the whole union+distinct re-executes per hop (the
-    # CLAUDE.md iterative-loop rule; r16 — measured 26 s → ~3 s on the
-    # 10-hop chain test from this + the frontier checkpoint below)
+    # checkpoint the whole union+distinct re-executes per hop
     und = _undirected(edges, src, dst).localCheckpoint(eager=True)
-    visited = spark.createDataFrame([(i, 0) for i in start_ids], "node long, hop int")
-    frontier = visited.select("node")
-    for h in range(1, hops + 1):
-        neighbors = (
-            und.join(F.broadcast(frontier.withColumnRenamed("node", "s")), "s")
+
+    def step(visited: DataFrame, i: int) -> DataFrame:
+        frontier = visited.filter(F.col("hop") == i).select(F.col("node").alias("s"))
+        new_nodes = (
+            und.join(F.broadcast(frontier), "s")
             .select(F.col("d").alias("node"))
             .distinct()
+            .join(visited.select("node"), "node", "left_anti")
         )
-        # checkpoint FIRST, then probe the MATERIALIZED frame: isEmpty on
-        # the raw plan would execute the join+anti once for the probe and
-        # AGAIN as next hop's subplan — and the un-checkpointed frontier
-        # lineage would otherwise re-run the whole history every hop
-        new_nodes = neighbors.join(
-            visited.select("node"), "node", "left_anti"
-        ).localCheckpoint(eager=True)
-        if new_nodes.isEmpty():
-            break
-        visited = visited.unionAll(new_nodes.withColumn("hop", F.lit(h)))
-        frontier = new_nodes
-    return visited
+        # new rows first: the probe finds them in the leading partition
+        return new_nodes.withColumn("hop", F.lit(i + 1)).unionAll(visited)
+
+    visited = _iterate(
+        edges.sparkSession.createDataFrame(
+            [(i, 0) for i in start_ids], "node long, hop int"
+        ),
+        step,
+        hops,
+        converged=lambda v, i: v.filter(F.col("hop") == i + 1).isEmpty(),
+    )
+    return _release(visited, und)
 
 
 def neighborhood_subgraph(
@@ -110,19 +157,11 @@ def connected_components(
         return _connected_components_star(edges, src, dst, max_iter)
     # materialize the symmetric edge list ONCE: the caller's edge lineage
     # is typically an expensive candidate-pair plan (n-gram Jaccard
-    # inverted-index self-join, LSH banding), and every label-propagation
-    # iteration joins the edges — without this, that plan re-executes
-    # per iteration (measured 30-40s -> 9s on dedup_leakage_safe_split
-    # at sf0.001). localCheckpoint = executor-local materialization, the
-    # standard shape for iterative algorithms at any scale.
-    #
-    # r16: the update min(own, neighbors' min) is fused into ONE
-    # join + ONE map-side-combinable groupBy by extending the edge set
-    # with tagged self-loops: min over Γ(v) ∪ {v} of labels IS the
-    # update, and the self row's label (min over the single tagged row)
-    # recovers the old label for the change flag — the previous shape
-    # (neighbor-min groupBy, then labels ⋈ neighbor_min) consumed the
-    # label frame twice and ran a second O(V) join per iteration.
+    # inverted-index self-join, LSH banding) that every round joins
+    # (measured 30-40s -> 9s on dedup_leakage_safe_split at sf0.001).
+    # Tagged self-loops make the update ONE join + ONE map-side-combinable
+    # groupBy: min over Γ(v) ∪ {v} of labels IS the new label, and the
+    # self row's label recovers the old one for the change flag.
     und = _undirected(edges, src, dst)
     nodes = und.select(F.col("s").alias("node")).distinct()
     ej = (
@@ -136,12 +175,10 @@ def connected_components(
         )
         .localCheckpoint(eager=True)
     )
-    labels = ej.filter("__self").select(
-        F.col("s").alias("node"), F.col("s").alias("component")
-    )
-    for _ in range(max_iter):
-        updated = (
-            ej.join(labels.withColumnRenamed("node", "d"), "d")
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        return (
+            ej.join(labels.select(F.col("node").alias("d"), "component"), "d")
             .groupBy(F.col("s").alias("node"))
             .agg(
                 F.min("component").alias("component"),
@@ -155,17 +192,16 @@ def connected_components(
                 (F.col("component") < F.col("__old")).alias("__chg"),
             )
         )
-        # checkpoint FIRST, then detect change against the materialized
-        # frame: probing `updated` directly would execute its join+agg
-        # plan once for the isEmpty and AGAIN for the checkpoint (r10 —
-        # measured 2x per-round work at sf0.1); this order runs the plan
-        # once and the change probe scans the checkpointed frame.
-        new_labels = updated.localCheckpoint(eager=True)
-        has_change = not new_labels.filter(F.col("__chg")).limit(1).isEmpty()
-        labels = new_labels.drop("__chg")
-        if not has_change:
-            break
-    return labels
+
+    labels = _iterate(
+        ej.filter("__self").select(
+            F.col("s").alias("node"), F.col("s").alias("component")
+        ),
+        step,
+        max_iter,
+        converged=lambda lab, _: lab.filter(F.col("__chg")).limit(1).isEmpty(),
+    )
+    return _release(labels.select("node", "component"), ej)
 
 
 def _connected_components_star(
@@ -196,7 +232,7 @@ def _connected_components_star(
         _undirected(edges, src, dst).select(F.col("s").alias("node")).distinct()
     )
     # canonical (hi, lo) pairs, self-loops dropped
-    e = (
+    e0 = (
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("hi"),
             F.least(F.col(src), F.col(dst)).alias("lo"),
@@ -213,8 +249,14 @@ def _connected_components_star(
         ).collect()[0]
         return (row["n"], row["h"])
 
-    fp = fingerprint(e)
-    for _ in range(max_iter):
+    fp = fingerprint(e0)
+
+    def unchanged(e: DataFrame, _: int) -> bool:
+        nonlocal fp
+        prev, fp = fp, fingerprint(e)
+        return fp == prev
+
+    def step(e: DataFrame, _: int) -> DataFrame:
         # ---- large-star over the symmetric neighborhood
         sym = e.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionAll(
             e.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
@@ -231,7 +273,7 @@ def _connected_components_star(
         # ---- small-star over larger→smaller directed edges
         lsd = ls.filter(F.col("hi") != F.col("lo")).distinct()
         mins2 = lsd.groupBy("hi").agg(F.min("lo").alias("m"))
-        ss = (
+        return (
             lsd.join(mins2, "hi")
             .select(
                 F.explode(
@@ -245,15 +287,15 @@ def _connected_components_star(
             .filter(F.col("hi") != F.col("lo"))
             .distinct()
         )
-        e = ss.localCheckpoint(eager=True)
-        new_fp = fingerprint(e)
-        if new_fp == fp:
-            break
-        fp = new_fp
+
+    e = _iterate(e0, step, max_iter, converged=unchanged)
     # star forest → labels; roots never appear as 'hi', so coalesce to self
     comp = e.groupBy(F.col("hi").alias("node")).agg(F.min("lo").alias("__c"))
-    return nodes.join(comp, "node", "left").select(
-        "node", F.coalesce("__c", F.col("node")).alias("component")
+    return _release(
+        nodes.join(comp, "node", "left").select(
+            "node", F.coalesce("__c", F.col("node")).alias("component")
+        ),
+        e0,
     )
 
 
@@ -301,15 +343,12 @@ def pagerank(
     ONCE (localCheckpoint, the iterative-algorithm shape shared with
     connected_components); each iteration is ONE equi-join of the edge
     list onto the share frame plus ONE map-side-combinable groupBy(dst)
-    sum that also folds in the dangling mass (r16: dangling rank rows
-    enter the SAME shuffle under a NULL sentinel key — previously a
-    separate 1-row broadcast subquery over the rank frame that
-    re-executed up to 2 un-checkpointed rank iterations per round), and
-    ONE join of the degree table onto the aggregated contributions — no
-    windows, no cross products. The rank frame CARRIES the static
-    out-degree, so there is no per-iteration ranks⋈degrees join. Both
-    per-iteration frames are lazily localCheckpoint'ed (lineage depth is
-    bounded at one iteration; no eager per-round job). Skewed in-degree
+    sum, ONE join of the degree table onto the aggregated contributions
+    and a broadcast 1-row dangling-mass aggregate — no windows, no cross
+    products. The rank frame CARRIES the static out-degree, so there is
+    no per-iteration ranks⋈degrees join. Rounds run through _iterate:
+    lazily localCheckpoint'ed (lineage one round deep, no eager
+    per-round job), the last one eagerly. Skewed in-degree
     (hub pages) is a groupBy-sum, which AQE + partial aggregation absorb
     (combiner shrinks hot keys map-side). iters is fixed (no convergence
     action): PageRank error decays as d^t, so t=10 at d=0.85 gives ~0.2%
@@ -320,14 +359,10 @@ def pagerank(
     fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).localCheckpoint(
         eager=True
     )
-    # node frame with out-degree (0 = dangling), reused every iteration.
-    # Fused (r10): distinct-nodes and out-degree come out of ONE groupBy
-    # (union tags src rows 1, dst rows 0; the sum of tags IS the
-    # out-degree and grouping IS the distinct) — replacing the previous
-    # distinct shuffle + degree groupBy + join + two checkpoints. At
-    # sf0.1 the setup phase dominated the whole query (per-iteration
-    # marginal cost is ~0.15s; setup was ~2.2s), and at cluster scale
-    # this is one fewer O(V) shuffle and one fewer stage barrier.
+    # node frame with out-degree (0 = dangling), reused every iteration:
+    # distinct-nodes and out-degree come out of ONE groupBy (union tags
+    # src rows 1, dst rows 0; the sum of tags IS the out-degree and
+    # grouping IS the distinct)
     nd = (
         fwd.select(F.col("s").alias("node"), F.lit(1).alias("__one"))
         .unionAll(fwd.select(F.col("d").alias("node"), F.lit(0).alias("__one")))
@@ -337,20 +372,15 @@ def pagerank(
     )
     n = nd.count()
     if n == 0:
-        return nd.select("node", F.lit(0).cast("long").alias("rank_scaled"))
+        return _release(
+            nd.select("node", F.lit(0).cast("long").alias("rank_scaled")), fwd, nd
+        )
     base = ((d_den - d_num) * scale // d_den) // n
-    # ranks carries __deg (static per node): each iteration reads ONE
-    # frame — no per-iteration ranks ⋈ degrees join. The frame is
-    # lazily localCheckpoint'ed ONCE per iteration: both of next round's
-    # consumers (the share projection in the main plan and the dangling
-    # 1-row broadcast subquery) read materialized rows, so the broadcast
-    # no longer re-executes un-checkpointed rank iterations (the r15
-    # structure re-ran up to 2 iterations per round inside the dangling
-    # subquery at checkpoint cadence 3).
-    ranks = nd.select(
-        "node", "__deg", F.lit(scale // n).cast("long").alias("rank_scaled")
-    ).localCheckpoint(eager=False)
-    for it in range(iters):
+
+    # ranks carries __deg (static per node): no per-iteration ranks ⋈
+    # degrees join; the share projection and the dangling broadcast both
+    # read the previous round's checkpointed rows
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         shares = ranks.filter(F.col("__deg") > 0).select(
             F.col("node").alias("s"), F.expr("rank_scaled div __deg").alias("__v")
         )
@@ -365,7 +395,7 @@ def pagerank(
             .agg(F.coalesce(F.sum("rank_scaled"), F.lit(0)).alias("__d"))
             .select(F.expr(f"__d div {n}").alias("__dang_share"))
         )
-        ranks = (
+        return (
             nd.join(contrib, "node", "left")
             .join(F.broadcast(dang))
             .select(
@@ -379,11 +409,14 @@ def pagerank(
                     )
                 ).cast("long").alias("rank_scaled"),
             )
-            .localCheckpoint(eager=False)
         )
-    # final frame eager: callers (bench hash, correctness compare) consume
-    # it more than once
-    return ranks.select("node", "rank_scaled").localCheckpoint(eager=True)
+
+    ranks = _iterate(
+        nd.select("node", "__deg", F.lit(scale // n).cast("long").alias("rank_scaled")),
+        step,
+        iters,
+    )
+    return _release(ranks.select("node", "rank_scaled"), fwd, nd)
 
 
 def hits(
@@ -424,28 +457,30 @@ def hits(
         fwd.select(F.col("s").alias("node"))
         .unionAll(fwd.select(F.col("d").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
+    # the count is the node frame's first reader: it materializes the lazy
+    # checkpoint, with no separate eager job
     n = nodes.count()
     if n == 0:
-        return nodes.select(
-            "node",
-            F.lit(0).cast("long").alias("hub_scaled"),
-            F.lit(0).cast("long").alias("authority_scaled"),
-        )
-    hubs = nodes.select("node", F.lit(scale // n).cast("long").alias("h"))
-    auths = None
+        zero = F.lit(0).cast("long")
+        out = nodes.select("node", zero.alias("hub_scaled"), zero.alias("authority_scaled"))
+        return _release(out, fwd, nodes)
 
-    def _normed(raw: DataFrame, tot: DataFrame, out: str, dense: bool) -> DataFrame:
-        """(raw*scale) div tot per node. dense=True left-joins from the
-        full node frame (zero-score nodes included — the output contract
-        and the oracle's a{t}/h{t} CTE shape). Mid-loop frames stay
-        SPARSE (r15 opt, guide §2.4): a zero-score node contributes
-        exactly 0 to the next phase's equi-join SUM whether present or
-        absent, so the per-phase nodes LEFT JOIN — one O(V) shuffle join
-        per phase per iteration — is pure overhead except on the final
-        iteration. Values are bit-identical: tot is computed from raw
-        either way, and (0 * scale) div tot = 0."""
+    def phase(scores: DataFrame, via: str, to: str, out: str, dense: bool) -> DataFrame:
+        """One phase: raw(x) = Σ ``scores`` over the edges whose ``to`` end
+        is x, joined on their ``via`` end; then (raw*scale) div Σraw.
+        dense=True left-joins from the full node frame (zero-score nodes
+        included — the output contract and the oracle's CTE shape).
+        Mid-loop frames stay SPARSE: a zero-score node adds exactly 0 to
+        the next phase's SUM whether present or absent, so the O(V) nodes
+        LEFT JOIN is needed only on the final round."""
+        raw = (
+            fwd.join(scores.toDF(via, "__x"), via)
+            .groupBy(F.col(to).alias("node"))
+            .agg(F.sum("__x").alias("__raw"))
+        )
+        tot = raw.agg(F.coalesce(F.sum("__raw"), F.lit(1)).alias("__tot"))
         side = nodes.join(raw, "node", "left") if dense else raw
         return side.join(F.broadcast(tot)).select(
             "node",
@@ -454,37 +489,22 @@ def hits(
             .alias(out),
         )
 
-    for it in range(iters):
-        last = it == iters - 1
-        # authority phase: a_raw(v) = sum of current hub scores over in-edges
-        a_raw = (
-            fwd.join(hubs.withColumnRenamed("node", "s"), "s")
-            .groupBy(F.col("d").alias("node"))
-            .agg(F.sum("h").alias("__raw"))
-        )
-        a_tot = a_raw.agg(F.coalesce(F.sum("__raw"), F.lit(1)).alias("__tot"))
-        auths = _normed(a_raw, a_tot, "a", dense=last)
-        if last:
-            # only the final authority frame is reused (the output join);
-            # mid-loop auths feed the hub phase once and stay lazy
-            auths = auths.localCheckpoint(eager=True)
-        # hub phase: h_raw(u) = sum of fresh authority scores over out-edges
-        h_raw = (
-            fwd.join(auths.withColumnRenamed("node", "d"), "d")
-            .groupBy(F.col("s").alias("node"))
-            .agg(F.sum("a").alias("__raw"))
-        )
-        h_tot = h_raw.agg(F.coalesce(F.sum("__raw"), F.lit(1)).alias("__tot"))
-        hubs = _normed(h_raw, h_tot, "h", dense=last)
-        # truncate lineage every 2nd iteration + last (each iteration is
-        # two join+agg phases; see pagerank's checkpoint-cadence note)
-        if it % 2 == 1 or last:
-            hubs = hubs.localCheckpoint(eager=True)
-    return (
-        hubs.join(auths, "node")
-        .select(
+    # a round: authorities a(v) = Σ_{u→v} h(u), then hubs h(u) = Σ_{u→v} a(v)
+    hubs = _iterate(
+        nodes.select("node", F.lit(scale // n).cast("long").alias("h")),
+        lambda h, _: phase(phase(h, "s", "d", "a", False), "d", "s", "h", False),
+        iters - 1,
+    )
+    # the final round is dense, and the output reads both of its frames
+    auths = phase(hubs, "s", "d", "a", dense=True).localCheckpoint(eager=True)
+    last = phase(auths, "d", "s", "h", dense=True).localCheckpoint(eager=True)
+    return _release(
+        last.join(auths, "node").select(
             "node",
             F.col("h").alias("hub_scaled"),
             F.col("a").alias("authority_scaled"),
-        )
+        ),
+        fwd,
+        nodes,
+        hubs,
     )
